@@ -31,6 +31,15 @@ The size estimate is Catalyst's ``optimizedPlan().stats().sizeInBytes``
 fixture-vs-warehouse by orders of magnitude, which is all the seam needs.
 Planning cost is not added: localCheckpoint plans the query eagerly
 anyway, and the estimate reuses that QueryExecution.
+
+:func:`_estimated_bytes` is the engine's ONE size estimator: every
+size-dependent decision (this seam, :func:`spread_small`, the robots
+fetch-plan screen, ``plans.stats.cost_of``, versioned compaction) reads
+it. It returns ``None`` for UNKNOWN — the stats call failed, or the plan
+reports ``spark.sql.defaultSizeInBytes`` (Catalyst's "no idea" sentinel,
+e.g. a ``createDataFrame`` relation). Each caller picks the safe
+direction for unknown: :func:`materialize` treats it as large (durable
+branch when ``tableDir`` is set), :func:`spread_small` does nothing.
 """
 
 from __future__ import annotations
@@ -38,7 +47,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: conf keys (documented in OPTIMIZATION_r12.md)
 TABLE_DIR_KEY = "spark.data_etl.materialize.tableDir"
@@ -46,34 +55,41 @@ MAX_LOCAL_KEY = "spark.data_etl.materialize.maxLocalBytes"
 _DEFAULT_MAX_LOCAL = str(4 * 1024**3)
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the optimized plan. Classic-mode JVM
-    access; any failure returns 0 (→ the local branch, today's behavior).
+def _estimated_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for the optimized plan, or ``None`` when
+    it is unknown (see module doc). Classic-mode JVM access.
     ``sizeInBytes`` is a Scala BigInt (py4j does not auto-convert it, and
     it can exceed Long after join estimates) — go through its decimal
     string."""
     try:
-        return int(
+        size = int(
             str(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
         )
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = conf.defaultSizeInBytes()
     except Exception:
-        return 0
+        return None
+    return None if size == unknown else size
 
 
-_SIZE_SUFFIX = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "p": 1024**5}
-
-
-def _size_conf_bytes(s: str) -> int:
-    """Parse a Spark size conf value ('128MB', '134217728b', '1g')."""
-    s = s.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    mult = _SIZE_SUFFIX.get(s[-1:], 1)
-    if mult != 1:
-        s = s[:-1]
-    return int(s) * mult
+def _conf_bytes(
+    spark: SparkSession, key: str, default: str | None = None
+) -> int:
+    """A size conf in bytes ('128MB', '134217728b', '1g'), parsed by
+    Spark's own parser — the one its size confs go through — so this
+    accepts exactly what Spark accepts for ``maxPartitionBytes``."""
+    # an explicit None default would shadow Spark's own default for key
+    value = spark.conf.get(key) if default is None else spark.conf.get(key, default)
+    try:
+        return int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                value
+            )
+        )
+    except Exception as e:
+        raise ValueError(f"{key}={value!r} is not a byte size") from e
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -82,10 +98,9 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     ``eager`` mirrors ``localCheckpoint(eager=...)`` on the local branch;
     the versioned-table branch is inherently eager (the commit writes)."""
     spark = df.sparkSession
-    max_local = _size_conf_bytes(
-        spark.conf.get(MAX_LOCAL_KEY, _DEFAULT_MAX_LOCAL)
-    )
-    if _estimated_bytes(df) <= max_local:
+    max_local = _conf_bytes(spark, MAX_LOCAL_KEY, _DEFAULT_MAX_LOCAL)
+    est = _estimated_bytes(df)
+    if est is not None and est <= max_local:
         return df.localCheckpoint(eager=eager)
     table_dir = spark.conf.get(TABLE_DIR_KEY, None)
     if not table_dir:
@@ -99,12 +114,13 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
 
 def spread_small(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's parallelism ONLY when the
-    relation is estimated small (same threshold axis as
-    :func:`suite.registry.spread_scan`, for relations that are NOT scans).
+    relation is estimated small; an unknown estimate is a no-op.
 
-    Use case: a post-shuffle relation (scan+distinct) that AQE coalesces
-    to ~1 partition at fixture scale, serializing expensive per-row work
-    downstream — worth one tiny shuffle to unlock the cores. At warehouse
+    Use cases: a single-row-group fixture scan, where one task decodes
+    every row and runs all pre-exchange per-row work; and a post-shuffle
+    relation (scan+distinct) that AQE coalesces to ~1 partition at
+    fixture scale, serializing expensive per-row work downstream — worth
+    one tiny shuffle to unlock the cores. At warehouse
     scale the same repartition would be a full extra shuffle of the
     corpus for nothing (the shuffle's own partitioning already spreads
     it), so it must not fire: the condition is
@@ -114,9 +130,8 @@ def spread_small(df: DataFrame) -> DataFrame:
     re-coalesced by AQE; round-robin survives it)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    max_split = _size_conf_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes")
-    )
-    if _estimated_bytes(df) < par * max_split:
+    max_split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    est = _estimated_bytes(df)
+    if est is not None and est < par * max_split:
         return df.repartition(par)
     return df

@@ -117,7 +117,6 @@ from data_etl_with_dbt_spark.operators.sketch import (  # noqa: F401
     hll_merge,
 )
 from data_etl_with_dbt_spark.operators.layout import (  # noqa: F401
-    compact_parquet,
     interleave_bits,
     pruned_read,
     skipping_stats,

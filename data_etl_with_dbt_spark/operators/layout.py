@@ -1,33 +1,24 @@
 """Data-layout optimization: multi-dimensional (Z-order) clustering and
-small-file compaction — the table-maintenance surface ("OPTIMIZE" in
-lakehouse engines) that keeps 100 TB of parquet scannable.
+footer-driven file skipping — the layout half of table maintenance
+("OPTIMIZE ... ZORDER BY" in lakehouse engines) that keeps 100 TB of
+parquet scannable.
 
-Why it matters at scale:
+Why it matters at scale: parquet data skipping works off per-file column
+min/max. A table range-partitioned on ONE column skips perfectly on that
+column and not at all on any other. Interleaving the bits of two columns'
+rank codes into one Morton key and range-partitioning on THAT gives every
+file a small bounding box in ALL interleaved dimensions, so selective
+filters on any of them prune files. The key is pure per-row integer
+bit-math (shift/mask/or — whole-stage codegen), and the layout write is
+one range repartition: the same shuffle a single-column sort would cost.
 
-* **Z-order clustering** — parquet data skipping works off per-file
-  column min/max. A table range-partitioned on ONE column skips perfectly
-  on that column and not at all on any other. Interleaving the bits of
-  two (or more) columns' rank codes into one Morton key and
-  range-partitioning on THAT gives every file a small bounding box in ALL
-  interleaved dimensions, so selective filters on any of them prune files.
-  The key is pure per-row integer bit-math (shift/mask/or — whole-stage
-  codegen), and the layout write is one range repartition: the same
-  shuffle a single-column sort would cost.
-* **Compaction** — streaming/incremental sinks accrete small files;
-  at 1000-executor scale a million 1 MB files turns listing + task
-  scheduling into the bottleneck. Compaction rewrites a directory to
-  ~``target_bytes`` files. Driver state is file METADATA (names/sizes),
-  never data.
-
-Both are plain-parquet stand-ins for transactional table formats: on a
-production lakehouse Z-ordering is ``OPTIMIZE ... ZORDER BY`` and
-compaction is bin-packing OPTIMIZE; the engine-side mechanics (Morton
-keys, range shuffle, size-targeted rewrite) are exactly these.
+Small-file compaction is not here: it lives on the versioned table
+(:func:`sources.versioned.compact`), whose atomic manifest commit is what
+makes a rewrite safe under concurrent readers.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -130,55 +121,6 @@ def skipping_stats(
         b_frac.alias("b_frac"),
         (a_frac * b_frac).alias("box_area"),
     )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Rewrite a parquet directory to ~``target_bytes`` files. Returns
-    ``{files_before, files_after, bytes}``.
-
-    Mechanics: size the output from file METADATA (bytes on disk — the
-    driver never touches data), read → ``localCheckpoint`` (truncate
-    lineage: the repo's read-then-rewrite rule — a task retry must never
-    recompute from the directory being replaced) → write to a sibling temp
-    dir → atomic directory swap. On a transactional table format this
-    whole function is bin-packing OPTIMIZE; the swap stands in for the
-    format's atomic commit."""
-    import glob as _glob
-    import shutil
-    import uuid as _uuid
-
-    # a leftover backup means a prior run crashed INSIDE the swap window
-    # (between the two renames `path` does not exist) — refuse to proceed
-    # so the operator can never bury recoverable data under a new rewrite
-    leftovers = _glob.glob(path.rstrip("/") + "__compact_old-*")
-    if leftovers:
-        raise RuntimeError(
-            f"previous compaction of {path} crashed mid-swap; restore or "
-            f"remove {leftovers} first (the backup holds the original data)"
-        )
-    parts = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    total = sum(os.path.getsize(p) for p in parts)
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path).localCheckpoint(eager=True)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    # unique backup name: a stale directory can never block the rename
-    bak = path.rstrip("/") + f"__compact_old-{_uuid.uuid4().hex}"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-    after = len(
-        [f for f in os.listdir(path) if f.endswith(".parquet")]
-    )
-    return {"files_before": len(parts), "files_after": after, "bytes": total}
 
 
 def stats_index(path: str, columns: list[str]) -> list[dict]:

@@ -1,5 +1,5 @@
 """Catalog statistics + cost-based-optimizer surface: ANALYZE TABLE,
-stats introspection, and EXPLAIN COST parsing.
+stats introspection, and the optimized plan's root statistics.
 
 Why it matters at 100 TB: without table/column stats Catalyst estimates
 join sizes from file bytes alone — good enough for scan-side broadcast
@@ -79,29 +79,20 @@ def column_stats(spark: SparkSession, table: str, column: str) -> dict:
 
 
 def cost_of(df: DataFrame) -> dict:
-    """Parse ``EXPLAIN COST``'s optimized-plan root statistics:
-    {'size_bytes': int | None, 'row_count': int | None}. Row counts appear
+    """The optimized plan's root statistics: {'size_bytes': int | None,
+    'row_count': int | None} — the numbers ``EXPLAIN COST`` prints at the
+    root. ``size_bytes`` is the engine's one size estimate
+    (``materialize._estimated_bytes``; None = unknown). Row counts appear
     only when the plan's leaves carry ANALYZE stats (or the plan is a
     LocalRelation) — a None row_count on a catalog table is the signal
     that ANALYZE hasn't run."""
-    text = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "cost"
-    )
-    # the full unit ladder Spark's bytesToString emits: omitting PiB/EiB
-    # (8.0 EiB is the UNKNOWN-stats default!) would make the search fall
-    # through the root and report a stats-bearing LEAF as the root
-    m = re.search(
-        r"Statistics\(sizeInBytes=([\d.]+) (B|KiB|MiB|GiB|TiB|PiB|EiB)"
-        r"(?:, rowCount=([\d.]+(?:E[+-]?\d+)?))?",
-        text,
-    )
-    if not m:
-        return {"size_bytes": None, "row_count": None}
-    mult = {
-        "B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40,
-        "PiB": 2**50, "EiB": 2**60,
-    }[m.group(2)]
-    return {
-        "size_bytes": int(float(m.group(1)) * mult),
-        "row_count": int(float(m.group(3))) if m.group(3) else None,
-    }
+    from data_etl_with_dbt_spark.materialize import _estimated_bytes
+
+    # Catalyst caches stats on the plan node: this is the same Statistics
+    # object the estimate reads
+    try:
+        rows = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        row_count = int(str(rows.get())) if rows.isDefined() else None
+    except Exception:
+        row_count = None
+    return {"size_bytes": _estimated_bytes(df), "row_count": row_count}

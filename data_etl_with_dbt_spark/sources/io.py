@@ -9,7 +9,7 @@ reader, predicate pushdown — SURVEY.md §1.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -319,155 +319,6 @@ def load_testdata(spark: SparkSession, sf_dir: str, tables: list[str] | None = N
         df.createOrReplaceTempView(t)
         out[t] = df
     return out
-
-
-def _zorder_component(
-    c: Column, lo: float | None, hi: float | None, bits: int
-) -> Column:
-    """Quantize a numeric/timestamp column onto the [0, 2^bits) integer grid
-    given its min/max; nulls land in cell 0 (they carry no skip signal).
-    An all-NULL column (or empty frame) has no min/max — it contributes a
-    constant, same as a zero-span column."""
-    if lo is None or hi is None:
-        return F.lit(0).cast("bigint")
-    span = hi - lo
-    if span <= 0:
-        return F.lit(0).cast("bigint")
-    cells = (1 << bits) - 1
-    scaled = F.floor((c.cast("double") - F.lit(float(lo))) / F.lit(span) * F.lit(cells))
-    return F.coalesce(
-        F.least(F.greatest(scaled, F.lit(0)), F.lit(cells)), F.lit(0)
-    ).cast("bigint")
-
-
-def zorder_value(quantized: list[Column], bits: int) -> Column:
-    """Interleave the bits of pre-quantized components into one Z-value
-    (Morton code). Static expression tree of shift/and/or — JVM codegen,
-    no UDF."""
-    parts = []
-    for b in range(bits):
-        for i, q in enumerate(quantized):
-            bit = F.shiftright(q, b).bitwiseAND(F.lit(1))
-            parts.append(F.shiftleft(bit, b * len(quantized) + i))
-    z = parts[0]
-    for p in parts[1:]:
-        z = z.bitwiseOR(p)
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 12,
-    num_files: int = 32,
-    fmt: str = "parquet",
-) -> None:
-    """Z-order-clustered write: co-locate rows that are close in EVERY listed
-    dimension, so parquet min/max footer stats prune files for predicates on
-    ANY of them (a single sort column only ever prunes itself). This is the
-    Delta/Iceberg `OPTIMIZE ZORDER BY` layout, built from Spark primitives:
-
-    1. one tiny stats pass (min/max per dimension — metadata-scale),
-    2. per-row Morton code from bit-interleaved quantized dimensions
-       (pure codegen arithmetic, no UDF),
-    3. ``repartitionByRange`` on the Z-value (range exchange; sampling picks
-       balanced file boundaries) + in-partition sort, so every output file
-       covers a compact Z-curve segment = a small hyper-rectangle.
-
-    At 100 TB the win is at read time: a 1000-executor scan of
-    ``WHERE user_id = k AND ts BETWEEN ...`` opens the few files whose
-    rectangles overlap instead of all of them. Cost at write: one extra
-    range exchange — the same price as any sorted write.
-
-    ``bits`` is clamped so the interleaved code fits a signed 64-bit int:
-    Spark's ``shiftleft`` uses Java shift semantics (amount mod 64), so
-    ``bits * len(cols) > 63`` would silently fold high bits back into low
-    positions and break the clustering instead of erroring.
-    """
-    if not cols:
-        raise ValueError("write_zordered needs at least one column")
-    bits = min(bits, 63 // len(cols))
-    stats = df.select(
-        *[F.min(F.col(c).cast("double")).alias(f"lo_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"hi_{i}") for i, c in enumerate(cols)],
-    ).first()
-    quantized = [
-        _zorder_component(F.col(c), stats[f"lo_{i}"], stats[f"hi_{i}"], bits)
-        for i, c in enumerate(cols)
-    ]
-    z = zorder_value(quantized, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
-
-
-def compact_files(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_mb: int = 128,
-    fmt: str = "parquet",
-) -> int:
-    """Small-file compaction: rewrite a directory of many small files into
-    ``ceil(total_bytes / target_mb)`` right-sized ones. Streaming sinks and
-    fine-grained incremental appends accrete thousands of tiny files; at
-    scan time every file costs a task launch plus a footer read, and at
-    100 TB the small-file tax dominates the actual IO. Returns the output
-    file count.
-
-    Plan: one narrow read → ``coalesce`` (no shuffle — coalescing only
-    merges input splits) → write to ``dst``. Callers swap directories
-    atomically (write-new / rename) — compacting in place over a lazy read
-    of the same path would race the scan.
-    """
-    import math
-
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(src)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    # RECURSIVE listing: a non-recursive listStatus over a Hive-partitioned
-    # directory sees only subdirectories, computes total=0, and coalesces
-    # the whole dataset into one giant file
-    total = 0
-    partition_dirs = set()
-    # Partition detection must look only at directories STRICTLY BELOW the
-    # src root: when src itself IS one partition directory (table/dt=0 —
-    # the per-partition compaction this guard's error message prescribes),
-    # the file's parent name contains '=' but is not a partition layer
-    # under src, so it must not trip the guard.
-    src_uri_path = fs.makeQualified(path).toUri().getPath().rstrip("/")
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        parent_uri_path = f.getPath().getParent().toUri().getPath().rstrip("/")
-        if parent_uri_path != src_uri_path and parent_uri_path.startswith(
-            src_uri_path + "/"
-        ):
-            rel = parent_uri_path[len(src_uri_path) + 1 :]
-            for comp in rel.split("/"):
-                if "=" in comp:
-                    partition_dirs.add(comp.split("=", 1)[0])
-        if f.isFile() and not name.startswith(("_", ".")):
-            total += f.getLen()
-    if partition_dirs:
-        # a flat rewrite would demote dt=/... directory pruning to a data
-        # column; compaction must keep the layout, one partition at a time
-        raise ValueError(
-            f"{src} is Hive-partitioned on {sorted(partition_dirs)}: "
-            "compact each partition directory separately so the pruning "
-            "layout survives"
-        )
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    spark.read.format(fmt).load(src).coalesce(n).write.mode("overwrite").format(fmt).save(dst)
-    return n
 
 
 def read_parquet_tolerant(

@@ -563,6 +563,7 @@ def fetch_plan(
     the screen run the eager one-pass ``skew_stats`` probe job at CALL
     time; per-batch loops that know their scale should pin
     ``True``/``False``."""
+    from data_etl_with_dbt_spark.materialize import _estimated_bytes
     from data_etl_with_dbt_spark.operators.relational import (
         per_key_cap,
         skew_stats,
@@ -593,18 +594,11 @@ def fetch_plan(
         # plausibly-huge inputs run the one-pass skew_stats probe job
         # eagerly (documented above).
         _rows_per_byte_margin = 8
-        try:
-            size_hint = int(
-                str(
-                    cand._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:  # stats unavailable → fall through to the probe
-            size_hint = int(auto_row_floor)
-        if size_hint * _rows_per_byte_margin < int(auto_row_floor):
+        size_hint = _estimated_bytes(cand)  # unknown → run the probe
+        if (
+            size_hint is not None
+            and size_hint * _rows_per_byte_margin < int(auto_row_floor)
+        ):
             two_phase = False
         else:
             top = skew_stats(cand, ["host"], top_k=1).collect()

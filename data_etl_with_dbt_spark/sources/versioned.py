@@ -28,16 +28,17 @@ other retries onto the next number). On object stores this maps to
 put-if-absent; the semantics here are the same.
 
 Scope note: this is deliberately the MECHANICS demo for the engine (atomic
-visibility, time travel, rollback, vacuum) — schema evolution, row-level
-deletes, and compaction-with-history live in the real table formats; see
-operators/layout.compact_parquet for the size-targeted rewrite this
-composes with.
+visibility, time travel, rollback, vacuum, compaction) — schema evolution
+and row-level deletes live in the real table formats. :func:`compact` is
+the engine's one small-file compaction: a size-targeted rewrite published
+as one atomic overwrite commit.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import uuid
 
@@ -352,7 +353,6 @@ def compact(
     path: str,
     dedupe_cols: list[str] | None = None,
     keep_versions: int = 2,
-    num_files: int = 1,
     group_by: list[str] | None = None,
     agg_exprs: list | None = None,
 ) -> dict:
@@ -360,8 +360,10 @@ def compact(
     streaming sinks' index shape: one small APPEND version per
     micro-batch → long manifests, many tiny files): rewrite the latest
     snapshot as ONE atomic overwrite commit (optionally deduplicated on
-    ``dedupe_cols`` and coalesced to ``num_files`` files), then vacuum
-    manifests/data outside ``keep_versions``.
+    ``dedupe_cols``), then vacuum manifests/data outside
+    ``keep_versions``. The output is coalesced to
+    ``ceil(snapshot bytes / spark.sql.files.maxPartitionBytes)`` files —
+    about one scan split per file (one file at fixture scale).
 
     The COMMIT is safe concurrently with the sinks: it is
     conflict-checked against the snapshot it compacted
@@ -391,6 +393,9 @@ def compact(
         raise ValueError("compact: pass group_by+agg_exprs OR dedupe_cols")
     if bool(group_by) != bool(agg_exprs):
         raise ValueError("compact: group_by and agg_exprs go together")
+    from data_etl_with_dbt_spark.materialize import _conf_bytes, _estimated_bytes
+
+    split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     last_err: Exception | None = None
     for _ in range(20):
         versions = list_versions(path)
@@ -398,11 +403,12 @@ def compact(
             return {"version": 0, "files_deleted": 0, "versions_dropped": 0}
         base = versions[-1]
         df = read_version(spark, path, base)
+        num_files = max(1, math.ceil((_estimated_bytes(df) or 0) / split))
         if group_by:
             df = df.groupBy(*group_by).agg(*agg_exprs)
         elif dedupe_cols:
             df = df.dropDuplicates(dedupe_cols)
-        df = df.coalesce(int(num_files))
+        df = df.coalesce(num_files)
         try:
             v = commit(df, path, mode="overwrite", expected_base=base)
             stats = vacuum(path, keep_versions=keep_versions)

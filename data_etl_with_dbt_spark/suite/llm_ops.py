@@ -7,7 +7,7 @@ an exact oracle-checked baseline computing the same relation."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from data_etl_with_dbt_spark.materialize import materialize
+from data_etl_with_dbt_spark.materialize import materialize, spread_small
 
 from data_etl_with_dbt_spark.operators import dedup as D
 from data_etl_with_dbt_spark.operators import similarity as S
@@ -23,7 +23,6 @@ from data_etl_with_dbt_spark.suite.registry import (
     dsum,
     load,
     query,
-    spread_scan,
 )
 
 # ---------------------------------------------------------------------------
@@ -319,11 +318,11 @@ FROM t
     bench=True,
 )
 def text_quality_stats(spark, sf_dir):
-    # spread_scan (r11): the per-doc tokenize/stats projection serialized
+    # spread_small (r11): the per-doc tokenize/stats projection serialized
     # on the single-row-group fixture's one scan task (0.75 -> 0.60 s);
     # conditional on splits < cores, so at real scale the query keeps its
     # zero-shuffle scan shape
-    docs = spread_scan(load(spark, sf_dir, "documents"), spark)
+    docs = spread_small(load(spark, sf_dir, "documents"))
     return TA.text_stats(docs, "doc_id", "text").select(
         "doc_id",
         big(F.col("n_chars")).alias("n_chars"),

@@ -88,47 +88,6 @@ def big(c: Column) -> Column:
     return c.cast("bigint")
 
 
-def spread_scan_fires(df: DataFrame, spark: SparkSession) -> bool:
-    """The :func:`spread_scan` condition: the relation is too small for the
-    scan to have filled the session's cores. Derived from Catalyst's
-    size-in-bytes estimate against ``cores x maxPartitionBytes`` — the
-    byte volume above which the file-split planner would have produced at
-    least one split per core anyway. (r12: previously probed
-    ``df.rdd.getNumPartitions()``, which forces a full physical-planning
-    pass + file-split enumeration per QUERY CONSTRUCTION and does not
-    exist under Spark Connect; the stats estimate reads the already-listed
-    file sizes off the optimized plan.)"""
-    from data_etl_with_dbt_spark.materialize import _estimated_bytes, _size_conf_bytes
-
-    par = spark.sparkContext.defaultParallelism
-    max_split = _size_conf_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes")
-    )
-    est = _estimated_bytes(df)
-    return 0 < est < par * max_split
-
-
-def spread_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Round-robin repartition ONLY when the scan is too small to have
-    filled the session's cores — the single-row-group fixture trap: every
-    sf fixture file is ONE parquet row group, so however Spark carves the
-    byte range, one task decodes every row and all pre-exchange CPU
-    (partial aggregation, per-row expression work) serializes on it.
-
-    Scale-adaptive by construction: a real-scale table's size estimate
-    exceeds cores x maxPartitionBytes, the condition is false, and this
-    is a no-op — no fact-table shuffle sneaks into the 100 TB plan.
-    Locally it shuffles the (tiny) fixture once and unlocks the cores.
-    The driver's low-core bench runs adapt too (the threshold is the
-    session's own parallelism). Keyless round-robin is deliberate: AQE
-    re-coalesces an explicit hash repartition of fixture-sized data to
-    one partition (CLAUDE.md trap), while round-robin partitioning
-    survives it."""
-    if spread_scan_fires(df, spark):
-        return df.repartition(spark.sparkContext.defaultParallelism)
-    return df
-
-
 _US_PER_DAY = 86_400 * 1_000_000
 
 

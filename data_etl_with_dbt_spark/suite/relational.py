@@ -13,7 +13,7 @@ Plan-shape notes (verified via .explain, see BENCH_NOTES.md):
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from data_etl_with_dbt_spark.materialize import materialize
+from data_etl_with_dbt_spark.materialize import materialize, spread_small
 
 from data_etl_with_dbt_spark.suite.registry import (
     big,
@@ -22,7 +22,6 @@ from data_etl_with_dbt_spark.suite.registry import (
     dsum,
     load,
     query,
-    spread_scan,
 )
 
 # ---------------------------------------------------------------------------
@@ -53,14 +52,13 @@ def q1_pricing_summary(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    # spread_scan (r11): the single-row-group fixture put the ENTIRE
+    # spread_small (r11): the single-row-group fixture put the ENTIRE
     # partial aggregation — four exact-decimal sums over 600k rows — on
     # one task (measured 1.66 s serialized vs 0.91 s spread). Conditional
     # on splits < cores, so a real-scale lineitem scan (thousands of
     # splits) keeps the canonical scan -> partial -> one-exchange shape.
-    filtered = spread_scan(
-        li.where(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp")),
-        spark,
+    filtered = spread_small(
+        li.where(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
     )
     return (
         filtered

@@ -5,17 +5,18 @@ A streaming/incremental sink leaves two problems on disk: many small files
 min/max skipping only prunes on whichever column the writer happened to
 order by). This example runs the maintenance pass that fixes both:
 
-    1. simulate a fragmented events table (many small appended files)
-    2. COMPACT it to size-targeted files (metadata-driven, atomic swap)
+    1. simulate a fragmented versioned events table (40 small files)
+    2. COMPACT it to size-targeted files (one atomic overwrite commit)
     3. rewrite it Z-ORDERED on (user_id, value) and show, from the parquet
        FOOTERS, how many files a selective filter on each dimension can
        skip — before vs after
 
 Run:  python examples/table_maintenance.py [workdir]
 
-Everything here is the tested library surface (`operators.layout`); this
-script is the wiring. On a transactional lakehouse table the same pass is
-OPTIMIZE (bin-packing) + ZORDER BY; the engine-side mechanics are identical.
+Everything here is the tested library surface (`sources.versioned`,
+`operators.layout`); this script is the wiring. On a transactional
+lakehouse table the same pass is OPTIMIZE (bin-packing) + ZORDER BY; the
+engine-side mechanics are identical.
 """
 
 from __future__ import annotations
@@ -31,11 +32,11 @@ from pyspark.sql import functions as F
 
 from data_etl_with_dbt_spark import get_spark
 from data_etl_with_dbt_spark.operators.layout import (
-    compact_parquet,
     skipping_stats,
     zorder_key,
     zorder_layout,
 )
+from data_etl_with_dbt_spark.sources import versioned as V
 
 
 def files_overlapping(path: str, col: str, lo: float, hi: float) -> tuple[int, int]:
@@ -58,21 +59,27 @@ def main(workdir: str) -> None:
     os.makedirs(workdir, exist_ok=True)
     table = os.path.join(workdir, "events_table")
 
-    # -- 1. a fragmented table: 40 small appended files -----------------
+    # -- 1. a fragmented table: 40 small files in one version -----------
     from data_etl_with_dbt_spark.sources.io import read_parquet
 
     events = read_parquet(spark, "/root/testdata/sf0.01/events.parquet").select(
         "event_id", "user_id", "value"
     )
-    events.repartition(40).write.mode("overwrite").parquet(table)
-    n_rows = spark.read.parquet(table).count()
+    V.commit(events.repartition(40), table, mode="overwrite")
+    before = V.read_version(spark, table)
+    n_rows = before.count()
 
     # -- 2. compact ------------------------------------------------------
-    stats = compact_parquet(spark, table, target_bytes=64 * 1024 * 1024)
-    assert spark.read.parquet(table).count() == n_rows
+    # a snapshot read scans exactly its manifest's file list
+    files_before = len(before.inputFiles())
+    out = V.compact(spark, table, keep_versions=1)
+    after = V.read_version(spark, table)
+    assert after.count() == n_rows
+    files_after = len(after.inputFiles())
+    assert files_after < files_before
     print(
-        f"compaction: {stats['files_before']} files -> {stats['files_after']} "
-        f"({stats['bytes'] / 1024:.0f} KiB total)"
+        f"compaction: {files_before} files -> {files_after} "
+        f"(version {out['version']}, {out['files_deleted']} files vacuumed)"
     )
 
     # -- 3. z-order rewrite + skipping report ----------------------------

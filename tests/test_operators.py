@@ -2106,27 +2106,6 @@ class TestZorderLayout:
             assert hi1 <= lo2  # contiguous, non-overlapping z-ranges
 
 
-class TestCompactParquet:
-    def test_compacts_and_preserves_rows(self, spark, tmp_path):
-        import os
-
-        from data_etl_with_dbt_spark.operators.layout import compact_parquet
-
-        path = str(tmp_path / "frag")
-        df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-        df.repartition(37).write.parquet(path)
-        n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-        assert n_before == 37
-
-        stats = compact_parquet(spark, path, target_bytes=1 << 30)
-        assert stats["files_before"] == 37
-        assert stats["files_after"] == 1
-
-        back = spark.read.parquet(path)
-        assert back.count() == 10000
-        assert back.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(10000))
-
-
 class TestProductQuantization:
     def _emb(self, spark):
         from data_etl_with_dbt_spark.sources.io import read_parquet
@@ -4556,21 +4535,6 @@ class TestRelationalMlReviewFixes:
         # the statless file is conservatively read, never pruned or crashed
         assert stats["files_total"] == 2 and stats["files_read"] == 2
         assert [r.id for r in df.collect()] == [1]
-
-    def test_compact_refuses_leftover_crash_backup(self, spark, tmp_path):
-        import os
-
-        from data_etl_with_dbt_spark.operators.layout import compact_parquet
-
-        p = str(tmp_path / "tbl")
-        spark.range(10).write.parquet(p)
-        os.makedirs(p + "__compact_old-deadbeef")
-        with pytest.raises(RuntimeError, match="crashed mid-swap"):
-            compact_parquet(spark, p)
-        os.rmdir(p + "__compact_old-deadbeef")
-        stats = compact_parquet(spark, p, target_bytes=1 << 30)
-        assert stats["files_after"] == 1
-        assert spark.read.parquet(p).count() == 10
 
     def test_trimmed_mean_builtin_keeps_null_key_group(self, spark):
         from data_etl_with_dbt_spark.functions.udaf import (

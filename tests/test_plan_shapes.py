@@ -16,13 +16,13 @@ def plan_of(spark, name: str) -> str:
     return QUERIES[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
 
 
-def _spread_scan_fires(spark, table: str) -> bool:
-    """The exact condition registry.spread_scan uses (same predicate)."""
+def _spread_fires(spark, table: str) -> bool:
+    """Whether materialize.spread_small spreads a scan of ``table``."""
+    from data_etl_with_dbt_spark.materialize import spread_small
     from data_etl_with_dbt_spark.sources.io import read_parquet
-    from data_etl_with_dbt_spark.suite.registry import spread_scan_fires
 
     df = read_parquet(spark, f"{SF_DIR}/{table}.parquet")
-    return spread_scan_fires(df, spark)
+    return spread_small(df) is not df
 
 
 def test_q1_partial_aggregation_and_pushdown(spark):
@@ -33,13 +33,13 @@ def test_q1_partial_aggregation_and_pushdown(spark):
     # column pruning: unread columns must not appear in the scan schema
     scan = plan.split("FileScan parquet ")[1].split("]")[0]
     assert "l_orderkey" not in scan and "l_suppkey" not in scan
-    # r11 spread_scan: on the single-row-group fixture the partial
+    # r11 spread_small: on the single-row-group fixture the partial
     # aggregation must NOT serialize on the scan task — a round-robin
     # exchange spreads it; at real scale (splits >= cores) the helper is
     # a no-op and the plan reverts to scan -> partial -> one exchange.
     # Gate on the helper's own condition so the assertion holds in any
-    # session (a local[1] run makes spread_scan a no-op by design — r12).
-    if _spread_scan_fires(spark, "lineitem"):
+    # session (a local[1] run makes spread_small a no-op by design — r12).
+    if _spread_fires(spark, "lineitem"):
         assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan
     else:
         assert "RoundRobinPartitioning" not in plan
@@ -99,7 +99,7 @@ def test_bench_queries_single_shuffle(spark):
     Round-robin exchanges are BUDGETED per query (r12 — previously
     blanket-exempt, which would have masked a stray unconditional
     repartition): the only sanctioned ones are the conditional
-    spread_scan exchanges on q1/text_quality (gated on the helper's own
+    spread_small exchanges on q1/text_quality (gated on the helper's own
     splits<cores condition) and media's bounded 240-id synthesis spread.
     Any other round-robin in a headline plan fails here.
     Hash/range/single-partition exchanges remain the data-dependent
@@ -120,8 +120,8 @@ def test_bench_queries_single_shuffle(spark):
         "curation_decisions",
     }
     rr_budget = {
-        "q1_pricing_summary": 1 if _spread_scan_fires(spark, "lineitem") else 0,
-        "text_quality_stats": 1 if _spread_scan_fires(spark, "documents") else 0,
+        "q1_pricing_summary": 1 if _spread_fires(spark, "lineitem") else 0,
+        "text_quality_stats": 1 if _spread_fires(spark, "documents") else 0,
         # unconditional by design: spreads the 240-id fixture synthesis'
         # per-row decode CPU; bounded at any scale (r11 measured)
         "media_frame_sampling": 1,

@@ -234,9 +234,7 @@ class TestZOrder:
         clustered columns; a plain sort by x gives it only on x. Footer stats
         are read directly — the same stats Spark's parquet filter pushdown
         skips with."""
-        from pyspark.sql import functions as F
-
-        from data_etl_with_dbt_spark.sources.io import write_zordered
+        from data_etl_with_dbt_spark.operators.layout import zorder_layout
 
         df = spark.range(20000).select(
             F.col("id"),
@@ -245,7 +243,9 @@ class TestZOrder:
         )
         zpath = str(tmp_path / "zorder")
         spath = str(tmp_path / "xsort")
-        write_zordered(df, zpath, ["x", "y"], bits=10, num_files=16)
+        zorder_layout(df, "x", "y", num_files=16, bits=10).drop(
+            "zkey"
+        ).write.parquet(zpath)
         (
             df.repartitionByRange(16, "x")
             .sortWithinPartitions("x")
@@ -265,40 +265,68 @@ class TestZOrder:
         assert sfrac > 0.9, f"expected no y-pruning in x-sorted layout: {sfrac}"
 
     def test_zorder_roundtrip_preserves_rows(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from data_etl_with_dbt_spark.sources.io import write_zordered
+        from data_etl_with_dbt_spark.operators.layout import zorder_layout
 
         df = spark.range(5000).select(
             F.col("id"), (F.col("id") % 7).alias("x"), (F.col("id") % 11).alias("y")
         )
         path = str(tmp_path / "z2")
-        write_zordered(df, path, ["x", "y"], bits=8, num_files=4)
+        zorder_layout(df, "x", "y", num_files=4, bits=8).write.parquet(path)
         back = spark.read.parquet(path)
         assert back.count() == 5000
         assert back.agg(F.sum("id")).first()[0] == sum(range(5000))
 
+    def test_zorder_layout_survives_all_null_column(self, spark, tmp_path):
+        """An all-NULL dimension has no min/max: its Z-key is NULL, the
+        range exchange puts those rows together, and none is lost."""
+        from data_etl_with_dbt_spark.operators.layout import zorder_layout
+
+        df = spark.range(500).select(
+            "id",
+            (F.col("id") % 7).alias("x"),
+            F.lit(None).cast("double").alias("dead"),  # all-NULL dimension
+        )
+        path = str(tmp_path / "znull")
+        zorder_layout(df, "x", "dead", num_files=2, bits=8).write.parquet(path)
+        back = spark.read.parquet(path)
+        assert back.count() == 500
+        assert back.agg(F.sum("id")).first()[0] == sum(range(500))
+
 
 class TestCompaction:
     def test_compact_merges_small_files(self, spark, tmp_path):
-        import glob
+        """versioned.compact sizes its output from the snapshot's bytes:
+        ~200 KB over 40 files is one maxPartitionBytes-sized file."""
+        from data_etl_with_dbt_spark.sources import versioned as V
 
-        from pyspark.sql import functions as F
-
-        from data_etl_with_dbt_spark.sources.io import compact_files
-
-        src = str(tmp_path / "small")
-        dst = str(tmp_path / "compacted")
+        path = str(tmp_path / "small")
         df = spark.range(50000).select("id", (F.col("id") % 13).alias("k"))
-        df.repartition(40).write.parquet(src)
-        assert len(glob.glob(f"{src}/part-*.parquet")) == 40
+        V.commit(df.repartition(40), path)
+        assert len(V.read_version(spark, path).inputFiles()) == 40
 
-        n = compact_files(spark, src, dst, target_mb=128)
-        files = glob.glob(f"{dst}/part-*.parquet")
-        assert len(files) == n == 1  # ~200 KB of data -> one 128 MB-target file
-        back = spark.read.parquet(dst)
+        V.compact(spark, path, keep_versions=1)
+        back = V.read_version(spark, path)
+        assert len(back.inputFiles()) == 1
         assert back.count() == 50000
         assert back.agg(F.sum("id")).first()[0] == df.agg(F.sum("id")).first()[0]
+
+    def test_compact_file_count_follows_max_partition_bytes(self, spark, tmp_path):
+        import os
+
+        from data_etl_with_dbt_spark.sources import versioned as V
+
+        path = str(tmp_path / "split")
+        V.commit(spark.range(50000).repartition(8), path)
+        total = sum(map(os.path.getsize, V._read_manifest(path, 1)["files"]))
+        old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        try:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(total // 3 + 1))
+            V.compact(spark, path, keep_versions=1)
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+        back = V.read_version(spark, path)
+        assert len(back.inputFiles()) == 3
+        assert back.count() == 50000
 
 
 class TestApplyCdc:
@@ -711,70 +739,6 @@ class TestAdviseJoin:
         adv = advise_join(a, b, ["k"], broadcast_rows=100)
         assert adv["strategy"] == "shuffle"
         assert adv["suggested_salt"] == 1
-
-
-class TestIoReviewFixes:
-    """Round-5 review regressions for compact_files and write_zordered."""
-
-    def test_compact_refuses_hive_partitioned_source(self, spark, tmp_path):
-        from data_etl_with_dbt_spark.sources.io import compact_files
-
-        src = str(tmp_path / "part_src")
-        df = spark.range(1000).select(
-            "id", (F.col("id") % 3).cast("string").alias("dt")
-        )
-        df.repartition(4).write.partitionBy("dt").parquet(src)
-        with pytest.raises(ValueError, match="Hive-partitioned"):
-            compact_files(spark, src, str(tmp_path / "out"))
-
-    def test_compact_single_partition_dir_works(self, spark, tmp_path):
-        """ADVICE r5: compacting ONE partition directory (table/dt=0 —
-        the exact workaround the guard's error message prescribes) must
-        succeed: only '=' directories strictly BELOW src are partition
-        layers, not src itself."""
-        from data_etl_with_dbt_spark.sources.io import compact_files
-
-        src = str(tmp_path / "part_src")
-        df = spark.range(1000).select(
-            "id", (F.col("id") % 3).cast("string").alias("dt")
-        )
-        df.repartition(4).write.partitionBy("dt").parquet(src)
-        dst = str(tmp_path / "dt0_out")
-        n = compact_files(spark, src + "/dt=0", dst)
-        assert n >= 1
-        got = spark.read.parquet(dst).count()
-        want = df.where(F.col("dt") == "0").count()
-        assert got == want
-
-    def test_zorder_survives_all_null_column_and_many_cols(self, spark, tmp_path):
-        from data_etl_with_dbt_spark.sources.io import write_zordered
-
-        df = spark.range(500).select(
-            "id",
-            (F.col("id") % 7).alias("x"),
-            F.lit(None).cast("double").alias("dead"),  # all-NULL dimension
-        )
-        p1 = str(tmp_path / "znull")
-        write_zordered(df, p1, ["x", "dead"], bits=8, num_files=2)
-        assert spark.read.parquet(p1).count() == 500
-
-        # 6 columns x default 12 bits = 72 interleaved bits would wrap
-        # Java's shiftleft (mod 64) and scramble the clustering: the clamp
-        # keeps the code inside 63 bits and the write correct
-        wide = spark.range(500).select(
-            "id", *[(F.col("id") % (3 + i)).alias(f"c{i}") for i in range(6)]
-        )
-        p2 = str(tmp_path / "zwide")
-        write_zordered(wide, p2, [f"c{i}" for i in range(6)], num_files=2)
-        back = spark.read.parquet(p2)
-        assert back.count() == 500
-        assert back.agg(F.sum("id")).first()[0] == sum(range(500))
-
-    def test_zorder_rejects_empty_cols(self, spark, tmp_path):
-        from data_etl_with_dbt_spark.sources.io import write_zordered
-
-        with pytest.raises(ValueError, match="at least one column"):
-            write_zordered(spark.range(5), str(tmp_path / "z"), [])
 
 
 def test_threaded_insert_overwrite_models_keep_untouched_partitions(spark):
