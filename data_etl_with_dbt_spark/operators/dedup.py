@@ -299,9 +299,9 @@ def incremental_minhash_dedup(
     incomparable values), ``num_hashes``, and ``shingle``. A mismatch does
     not error here (signatures are just long arrays): the band join finds
     ~nothing and every cross-batch duplicate silently survives. The
-    path-owning sink (``streaming/intake.minhash_intake_sink``) persists a
-    sidecar recipe marker and fails loudly on divergence; callers managing
-    their own store should do the same.
+    path-owning sink (``streaming/intake.minhash_intake_sink``) records the
+    recipe in every index commit's manifest meta and fails loudly on
+    divergence; callers managing their own store should do the same.
 
     Verdict per new document, keep-first semantics:
     ``dup_of`` = the best duplicate among index docs and SMALLER-ID batch
@@ -1599,8 +1599,9 @@ def incremental_ngram_df_prune(
     (the boilerplate dictionary and the returned store), so it is lazily
     ``localCheckpoint``ed against Catalyst's no-cross-consumer-CSE
     re-execution; callers persisting the index to a path it was also read
-    from this batch must still checkpoint BEFORE the write (the
-    read-then-overwrite lineage trap, see ``streaming/intake.py``).
+    from this batch must read a pinned snapshot (``streaming/intake.py``
+    keeps it as a versioned table) or checkpoint BEFORE the write (the
+    read-then-overwrite lineage trap).
     """
     spans = _span_stream(new_docs, id_col, text_col, span_tokens)
     batch_df = spans.groupBy("__span").agg(

@@ -32,8 +32,8 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     ``spark.createDataFrame(list)`` parallelizes the list into
     ``defaultParallelism`` slices, and each slice costs one Python-worker
-    round trip to evaluate. A single-task consumer — the ``coalesce(1)``
-    marker/watermark writes all the streaming sinks do per batch — then
+    round trip to evaluate. A single-task consumer — e.g. the drift
+    monitor's one-row ledger append per batch — then
     pays those round trips SERIALLY: measured ~4 s per ONE-ROW marker
     write at local[32] (~125 ms x 32 slices), and the cost grows with
     the core count, which is exactly backwards. One slice makes it one

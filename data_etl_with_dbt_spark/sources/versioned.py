@@ -20,7 +20,17 @@ written. Old versions stay readable (time travel) until `vacuum`.
 Layout:
     table/
       data/<commit-uuid>/part-*.parquet     (immutable once committed)
-      _versions/v00000001.json              {"files": [...], "mode": ...}
+      _versions/v00000001.json              {"files": [...], "mode": ...,
+                                             "meta": {...}}
+
+``meta`` is the writer's own small JSON state, published atomically with
+the file list it describes — the streaming sinks keep their replay marks,
+recipes, watermarks and Bloom coverage there, so a state write and its
+marker are one commit, never two. :func:`latest` reads it. Meta is NOT
+carried forward implicitly: each :func:`commit` / :func:`merge_commit`
+records exactly the ``meta`` it is given. :func:`compact` and
+:func:`rollback` copy their base manifest's meta, because they do not
+change a snapshot's logical content.
 
 Concurrency: version numbers are claimed by `os.rename` onto a name that
 must not exist — the filesystem arbitrates racing writers (one wins, the
@@ -54,16 +64,52 @@ def _manifest_path(path: str, version: int) -> str:
 
 
 def list_versions(path: str) -> list[int]:
-    """Committed versions, ascending; [] for a table that never committed."""
+    """Committed versions, ascending; [] for a table that never committed.
+    Only a missing ``_versions/`` means "never committed" — any other
+    listing error raises, so an unlistable store fails the caller stale
+    instead of reading as a fresh table (which would restart sink state)."""
+    try:
+        names = os.listdir(_versions_dir(path))
+    except FileNotFoundError:
+        return []
     return sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(os.path.join(_versions_dir(path), "v*.json"))
+        int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json")
     )
 
 
 def _read_manifest(path: str, version: int) -> dict:
     with open(_manifest_path(path, version)) as f:
         return json.load(f)
+
+
+def latest(path: str) -> tuple[int, dict]:
+    """``(version, meta)`` of the latest commit; ``(0, {})`` for a table
+    that never committed. Pair with ``read_version(spark, path, version)``
+    to read the snapshot the meta describes."""
+    versions = list_versions(path)
+    if not versions:
+        return 0, {}
+    return versions[-1], _read_manifest(path, versions[-1]).get("meta", {})
+
+
+def _publish(path: str, version: int, manifest: dict) -> bool:
+    """Claim ``version`` with ``manifest``; False when another writer holds
+    it. The claim is a rename onto a name that must not exist — the
+    filesystem arbitrates racing writers (put-if-absent on object
+    stores)."""
+    tmp = os.path.join(_versions_dir(path), f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump({**manifest, "version": version}, f)
+    target = _manifest_path(path, version)
+    try:
+        if os.path.exists(target):
+            raise FileExistsError(target)
+        os.link(tmp, target)  # link+unlink = fail-if-exists rename
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 def _json_stat(v):
@@ -128,6 +174,7 @@ def commit(
     mode: str = "append",
     stats_columns: list[str] | None = None,
     expected_base: int | None = None,
+    meta: dict | None = None,
 ) -> int:
     """Write ``df`` as a new table version; returns the committed version.
 
@@ -143,7 +190,10 @@ def commit(
     latest version still equals it, else :class:`ConcurrentCommitError` —
     an append landing mid-merge must force a re-merge, not vanish from the
     overwritten snapshot. Plain appends don't need it (the retry loop
-    rebases their file list automatically)."""
+    rebases their file list automatically).
+
+    ``meta`` (JSON-serializable) is recorded in this version's manifest
+    only — see the module doc."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     os.makedirs(_versions_dir(path), exist_ok=True)
@@ -178,31 +228,16 @@ def commit(
             # path suffices
             schemas = sorted(set(prev.get("schemas", [])) | {schema_str})
             fstats = {**prev.get("file_stats", {}), **staged_stats}
-        tmp = os.path.join(_versions_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "files": files,
-                    "mode": mode,
-                    "version": next_v,
-                    "schemas": schemas,
-                    "file_stats": fstats,
-                },
-                f,
-            )
-        target = _manifest_path(path, next_v)
-        try:
-            # claim the version: rename onto a name that must not exist —
-            # the filesystem arbitrates racing writers (put-if-absent on
-            # object stores)
-            if os.path.exists(target):
-                raise FileExistsError(target)
-            os.link(tmp, target)  # link+unlink = fail-if-exists rename
-            os.unlink(tmp)
+        manifest = {
+            "files": files,
+            "mode": mode,
+            "schemas": schemas,
+            "file_stats": fstats,
+            "meta": meta or {},
+        }
+        if _publish(path, next_v, manifest):
             return next_v
-        except FileExistsError:
-            os.unlink(tmp)
-            # another writer claimed next_v: recompute base and retry
+        # another writer claimed next_v: recompute base and retry
 
 
 def read_version(
@@ -279,35 +314,21 @@ def rollback(path: str, to_version: int) -> int:
     history is append-only (the audit trail survives the rollback),
     exactly like Delta's RESTORE."""
     manifest = _read_manifest(path, to_version)
+    # carry the snapshot's reader metadata: without the schemas list a
+    # rollback to a schema-evolved snapshot would read without mergeSchema
+    # and silently drop the evolved columns (and later appends would seed
+    # their schema tracking from nothing); meta describes the same content
+    restored = {
+        "files": manifest["files"],
+        "mode": "rollback",
+        "schemas": manifest.get("schemas", []),
+        "file_stats": manifest.get("file_stats", {}),
+        "meta": manifest.get("meta", {}),
+    }
     while True:
-        versions = list_versions(path)
-        next_v = versions[-1] + 1
-        tmp = os.path.join(_versions_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "files": manifest["files"],
-                    "mode": "rollback",
-                    "version": next_v,
-                    # carry the snapshot's reader metadata: without the
-                    # schemas list a rollback to a schema-evolved snapshot
-                    # would read without mergeSchema and silently drop the
-                    # evolved columns (and later appends would seed their
-                    # schema tracking from nothing)
-                    "schemas": manifest.get("schemas", []),
-                    "file_stats": manifest.get("file_stats", {}),
-                },
-                f,
-            )
-        target = _manifest_path(path, next_v)
-        try:
-            if os.path.exists(target):
-                raise FileExistsError(target)
-            os.link(tmp, target)
-            os.unlink(tmp)
+        next_v = list_versions(path)[-1] + 1
+        if _publish(path, next_v, restored):
             return next_v
-        except FileExistsError:
-            os.unlink(tmp)
 
 
 def _data_file_key(p: str) -> tuple[str, str, str]:
@@ -403,6 +424,7 @@ def compact(
             return {"version": 0, "files_deleted": 0, "versions_dropped": 0}
         base = versions[-1]
         df = read_version(spark, path, base)
+        meta = _read_manifest(path, base).get("meta", {})
         num_files = max(1, math.ceil((_estimated_bytes(df) or 0) / split))
         if group_by:
             df = df.groupBy(*group_by).agg(*agg_exprs)
@@ -410,7 +432,9 @@ def compact(
             df = df.dropDuplicates(dedupe_cols)
         df = df.coalesce(num_files)
         try:
-            v = commit(df, path, mode="overwrite", expected_base=base)
+            v = commit(
+                df, path, mode="overwrite", expected_base=base, meta=meta
+            )
             stats = vacuum(path, keep_versions=keep_versions)
             return {"version": v, **stats}
         except ConcurrentCommitError as e:  # an append beat us — re-compact
@@ -426,6 +450,7 @@ def merge_commit(
     path: str,
     key: str,
     delete_col: str | None = None,
+    meta: dict | None = None,
 ) -> int:
     """Upsert commit (MERGE INTO semantics on the versioned table): rows in
     ``df`` replace same-``key`` rows of the latest snapshot, new keys
@@ -440,7 +465,8 @@ def merge_commit(
     (no lineage cut needed). Against CONCURRENT writers the commit is
     conflict-checked (``expected_base``): an append landing between the
     snapshot read and the overwrite publish forces a re-merge from the new
-    latest version instead of silently vanishing (lost update)."""
+    latest version instead of silently vanishing (lost update). ``meta``
+    is recorded as in :func:`commit`."""
     from pyspark.sql import functions as F
 
     for _ in range(20):
@@ -458,7 +484,9 @@ def merge_commit(
             ).drop(delete_col)
         merged = kept.unionByName(upserts) if kept is not None else upserts
         try:
-            return commit(merged, path, mode="overwrite", expected_base=base)
+            return commit(
+                merged, path, mode="overwrite", expected_base=base, meta=meta
+            )
         except ConcurrentCommitError:
             continue  # re-merge on top of the version that beat us
     raise ConcurrentCommitError(

@@ -233,7 +233,10 @@ def core_transform_sink(state_path: str):
     State posture: like ``additive_rollup_sink``, state lives in the TABLE,
     not in stream state — no watermark bound on key cardinality, restarts
     are free, and the table is queryable mid-stream via
-    :func:`read_core_transform`. The per-batch rewrite cost is the state
+    :func:`read_core_transform`. The state is a :mod:`sources.versioned`
+    snapshot: each batch merges into the pinned latest version and commits
+    one atomic overwrite carrying the replay mark (see
+    ``streaming/intake.py``). The per-batch rewrite cost is the state
     table size (distinct keys), never the stream history; at warehouse
     scale back it with a transactional table format whose MERGE touches
     only changed key partitions.
@@ -245,22 +248,22 @@ def core_transform_sink(state_path: str):
     applies the shared finalize stage on read.
     """
     from ..models.events import dedup_newest, project_events
-    from .intake import _parquet_or_none
+    from ..sources import versioned as V
+    from .intake import _state_meta
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch_best = dedup_newest(project_events(batch))
-        existing = _parquet_or_none(spark, state_path)
-        merged = (
-            dedup_newest(batch_best.unionByName(existing))
-            if existing is not None
-            else batch_best
-        )
-        # The plan reads state_path and then overwrites it: truncate the
-        # lineage first or a task retry after the delete recomputes from
-        # missing files (the engine's 4x-sighted read-then-write trap).
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            state_path
+        version, meta = V.latest(state_path)
+        new_meta = _state_meta(spark, meta, batch_id)
+        if new_meta is None:
+            return  # replay of a committed batch
+        merged = dedup_newest(project_events(batch))
+        if version:
+            existing = V.read_version(spark, state_path, version)
+            merged = dedup_newest(merged.unionByName(existing))
+        V.commit(
+            merged, state_path, mode="overwrite", expected_base=version,
+            meta=new_meta,
         )
 
     return process
@@ -271,5 +274,6 @@ def read_core_transform(spark: SparkSession, state_path: str) -> DataFrame:
     finalize stage (epoch math, CASE derivation, positivity filter) over
     the newest-per-key projected state."""
     from ..models.events import finalize_events
+    from ..sources import versioned as V
 
-    return finalize_events(spark.read.parquet(state_path))
+    return finalize_events(V.read_version(spark, state_path))

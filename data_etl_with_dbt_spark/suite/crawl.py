@@ -480,6 +480,7 @@ def streaming_rollup_events(spark, sf_dir):
     key cardinality); per-batch cost is the rollup size, never history."""
     import tempfile
 
+    from data_etl_with_dbt_spark.sources import versioned as V
     from data_etl_with_dbt_spark.streaming.intake import additive_rollup_sink
 
     ev = load(spark, sf_dir, "events").select(
@@ -495,7 +496,7 @@ def streaming_rollup_events(spark, sf_dir):
     )
     for r in range(3):  # three deterministic micro-batches by residue
         sink(ev.where(F.col("__batch_key") % 3 == r).drop("__batch_key"), r)
-    out = spark.read.parquet(path)
+    out = V.read_version(spark, path)
     return out.select(
         "event_type",
         big(F.col("user_mod")).alias("user_mod"),

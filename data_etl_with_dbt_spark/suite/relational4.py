@@ -651,6 +651,7 @@ def cdc_strict_seq_replication(spark, sf_dir):
     (the driver protocol can't run a continuous query)."""
     import tempfile
 
+    from data_etl_with_dbt_spark.sources import versioned as V
     from data_etl_with_dbt_spark.streaming.intake import cdc_replication_sink
 
     k = F.col("o_orderkey")
@@ -712,4 +713,4 @@ def cdc_strict_seq_replication(spark, sf_dir):
     sink(updates, 1)
     sink(inserts, 0)  # at-least-once replay of an applied batch: must no-op
     sink(deletes, 2)
-    return spark.read.parquet(snap).orderBy("o_orderkey")
+    return V.read_version(spark, snap).orderBy("o_orderkey")

@@ -12,8 +12,10 @@ workload. Documents arrive as micro-batches; each batch is:
 Run:  python examples/streaming_intake.py [workdir]
 
 Everything here is the tested library surface (`ml.quality`,
-`streaming.intake`); this script is the wiring. At production scale the
-parquet paths become transactional tables and the source becomes
+`streaming.intake`); this script is the wiring. The index and the
+rollup are versioned tables (read them with `versioned.read_version`);
+at production scale the parquet outputs become transactional tables and
+the source becomes
 Kafka/files-on-object-store; the micro-batch logic is unchanged.
 """
 
@@ -30,6 +32,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import functions as F
 
 from data_etl_with_dbt_spark import get_spark, ml
+from data_etl_with_dbt_spark.sources import versioned as V
 from data_etl_with_dbt_spark.streaming.intake import (
     additive_rollup_sink,
     minhash_intake_sink,
@@ -148,7 +151,8 @@ def main(workdir: str) -> None:
     print(f"  suppressed (dup)   {n_dup:>5}")
     assert n_corpus + n_rej + n_dup == n_in
     print("\nper-source intake rollup (additive table, queryable mid-stream):")
-    for r in spark.read.parquet(os.path.join(workdir, "rollup")).orderBy("source").collect():
+    rollup_state = V.read_version(spark, os.path.join(workdir, "rollup"))
+    for r in rollup_state.orderBy("source").collect():
         print(f"  {r.source:<12} docs={r.docs:<4} tokens={r.tokens}")
 
 

@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from data_etl_with_dbt_spark.sources import versioned as V
 from data_etl_with_dbt_spark.streaming.pipeline import (
     read_event_stream,
     running_user_totals,
@@ -284,7 +285,7 @@ def test_minhash_intake_dedups_across_batches(spark, tmp_path):
 
     corpus = spark.read.parquet(str(tmp_path / "corpus"))
     assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 11]
-    index = spark.read.parquet(str(tmp_path / "index")).collect()
+    index = V.read_version(spark, str(tmp_path / "index")).collect()
     assert sorted(r.doc_id for r in index) == [1, 2, 11]
     assert all(len(r.signature) == 32 for r in index)
     dups = {
@@ -422,7 +423,7 @@ def test_quality_gated_intake(spark, tmp_path):
     # junk (101, 201) rejected by the model; 202 deduped against index doc 100
     assert corpus_ids == [100, 200]
     index_ids = sorted(
-        r.doc_id for r in spark.read.parquet(str(tmp_path / "qindex")).collect()
+        r.doc_id for r in V.read_version(spark, str(tmp_path / "qindex")).collect()
     )
     assert index_ids == [100, 200]
     rejects = spark.read.parquet(str(tmp_path / "qrejects")).collect()
@@ -470,9 +471,10 @@ def test_additive_rollup_sink_matches_batch_aggregate(spark, tmp_path):
 
     got = {
         r.region: r.amount
-        for r in spark.read.parquet(str(tmp_path / "rollup")).collect()
+        for r in V.read_version(spark, str(tmp_path / "rollup")).collect()
     }
     assert got == {"us": 17, "eu": 8, "ap": 8}
+    assert len(V.list_versions(str(tmp_path / "rollup"))) == 3
 
 
 def test_streaming_intake_example_runs(spark, tmp_path, monkeypatch, capsys):
@@ -493,27 +495,6 @@ def test_streaming_intake_example_runs(spark, tmp_path, monkeypatch, capsys):
     mod.main(str(tmp_path / "wd"))  # asserts the funnel internally
     out = capsys.readouterr().out
     assert "kept in corpus" in out and "per-source intake rollup" in out
-
-
-def test_parquet_or_none_distinguishes_missing_from_broken(spark, tmp_path):
-    """Only path-not-found means 'first batch'. A broken store must RAISE —
-    treating it as first-batch would let additive_rollup_sink overwrite the
-    accumulated snapshot with a single batch's delta."""
-    import pytest as _pytest
-
-    from data_etl_with_dbt_spark.streaming.intake import _parquet_or_none
-
-    missing = str(tmp_path / "never-written")
-    assert _parquet_or_none(spark, missing) is None
-
-    broken = tmp_path / "broken-store"
-    broken.mkdir()
-    (broken / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with _pytest.raises(Exception):
-        df = _parquet_or_none(spark, str(broken))
-        # footer errors may surface at plan or execute time; force both
-        if df is not None:
-            df.collect()
 
 
 def test_core_transform_stream_matches_batch(spark, tmp_path):
@@ -705,7 +686,10 @@ def test_boilerplate_intake_accumulates_df_across_batches(spark, tmp_path):
     )
     assert corpus == [1, 2, 10, 20]
     # the store accumulated the banner's df across batches
-    dfs = {r.span: r.df for r in spark.read.parquet(str(tmp_path / "dfindex")).collect()}
+    dfs = {
+        r.span: r.df
+        for r in V.read_version(spark, str(tmp_path / "dfindex")).collect()
+    }
     assert dfs[BANNER.lower()] == 4
     report = {
         (r.doc_id): (r.n_spans_dropped, r.batch_id)
@@ -765,7 +749,7 @@ def test_streaming_cms_sketch_rollup_matches_batch_build(spark, tmp_path):
     q.awaitTermination(180)
 
     streamed = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "cms_table")).collect())
+        map(tuple, V.read_version(spark, str(tmp_path / "cms_table")).collect())
     )
     whole = spark.createDataFrame(
         [r for b in batches for r in b], "token string"
@@ -961,7 +945,7 @@ def test_streaming_kmv_sketch_rollup_matches_batch_build(spark, tmp_path):
     )
     q.awaitTermination(180)
 
-    table = spark.read.parquet(str(tmp_path / "kmv_table"))
+    table = V.read_version(spark, str(tmp_path / "kmv_table"))
     streamed = sorted(map(tuple, table.collect()))
     whole = spark.createDataFrame(
         [r for b in batches for r in b], "event_type string, user string"
@@ -1087,7 +1071,7 @@ def test_streaming_cdc_replication_prefix_consistent(spark, tmp_path):
     )
     q.awaitTermination(180)
 
-    got = {r.id: r.v for r in spark.read.parquet(snap_path).collect()}
+    got = {r.id: r.v for r in V.read_version(spark, snap_path).collect()}
     assert got == {1: "A", 2: "B", 4: "d"}
 
     # prefix-consistency: equals the one-shot apply of all envelopes
@@ -1104,21 +1088,20 @@ def test_streaming_cdc_replication_prefix_consistent(spark, tmp_path):
     # replay-idempotence: re-applying batch 1's envelopes onto the final
     # state only re-upserts already-present rows / re-deletes absent ones
     sink(spark.createDataFrame(batches[1], "value string"), batch_id=99)
-    again = {r.id: r.v for r in spark.read.parquet(snap_path).collect()}
+    again = {r.id: r.v for r in V.read_version(spark, snap_path).collect()}
     assert again == got
 
 
 def test_streaming_cdc_versioned_time_travel(spark, tmp_path):
-    """cdc_versioned_sink: each batch is one atomic versioned commit, so
-    the replica time-travels — version 1 shows the state after batch 0,
-    the latest shows the fully-applied state, and a replayed batch commits
-    no new version."""
+    """cdc_replication_sink keeps a versioned replica: each batch is one
+    atomic commit, so the replica time-travels — version 1 shows the state
+    after batch 0, the latest shows the fully-applied state, and a
+    replayed batch commits no new version."""
     import glob as _glob
     import os as _os
     import time as _time
 
-    from data_etl_with_dbt_spark.sources import versioned as V
-    from data_etl_with_dbt_spark.streaming.intake import cdc_versioned_sink
+    from data_etl_with_dbt_spark.streaming.intake import cdc_replication_sink
 
     batches = [
         [_dbz("c", 10, 1, "a"), _dbz("c", 11, 2, "b")],
@@ -1135,7 +1118,7 @@ def test_streaming_cdc_versioned_time_travel(spark, tmp_path):
             _os.utime(f, (now + 10 * i, now + 10 * i))
 
     table = str(tmp_path / "vcdc_table")
-    sink = cdc_versioned_sink(table, "id: long, v: string", "id")
+    sink = cdc_replication_sink(table, "id: long, v: string", "id")
     q = (
         spark.readStream.schema("value string")
         .option("maxFilesPerTrigger", 1)
@@ -1157,6 +1140,8 @@ def test_streaming_cdc_versioned_time_travel(spark, tmp_path):
     # replaying an applied batch commits NOTHING (watermark guard)
     sink(spark.createDataFrame(batches[0], "value string"), batch_id=99)
     assert V.list_versions(table) == versions
+    # the watermark rides in the manifest of the snapshot it describes
+    assert V.latest(table)[1]["wm"] == 22
 
 
 def test_streaming_cdc_equal_seq_across_batches_not_dropped(spark, tmp_path):
@@ -1175,14 +1160,14 @@ def test_streaming_cdc_equal_seq_across_batches_not_dropped(spark, tmp_path):
     b1 = [_dbz("c", 20, 3, "tie"), _dbz("u", 25, 1, "A")]
     sink(spark.createDataFrame(b0, "value string"), batch_id=0)
     sink(spark.createDataFrame(b1, "value string"), batch_id=1)
-    got = {r.id: r.v for r in spark.read.parquet(snap).collect()}
+    got = {r.id: r.v for r in V.read_version(spark, snap).collect()}
     assert got == {1: "A", 2: "b", 3: "tie"}  # key 3 NOT dropped
 
     # replay both batches in both orders: content-hash boundary set makes
     # re-delivery a no-op even at the tied sequence
     sink(spark.createDataFrame(b1, "value string"), batch_id=2)
     sink(spark.createDataFrame(b0, "value string"), batch_id=3)
-    again = {r.id: r.v for r in spark.read.parquet(snap).collect()}
+    again = {r.id: r.v for r in V.read_version(spark, snap).collect()}
     assert again == got
 
 
@@ -1204,13 +1189,13 @@ def test_streaming_cdc_strict_seq_contract(spark, tmp_path):
     # clean strictly-increasing log applies
     b0 = [_dbz("c", 10, 1, "a"), _dbz("c", 20, 2, "b")]
     sink(spark.createDataFrame(b0, "value string"), batch_id=0)
-    assert {r.id: r.v for r in spark.read.parquet(snap).collect()} == {
+    assert {r.id: r.v for r in V.read_version(spark, snap).collect()} == {
         1: "a", 2: "b",
     }
 
     # byte-identical replay of an applied batch: still a silent no-op
     sink(spark.createDataFrame(b0, "value string"), batch_id=1)
-    assert {r.id: r.v for r in spark.read.parquet(snap).collect()} == {
+    assert {r.id: r.v for r in V.read_version(spark, snap).collect()} == {
         1: "a", 2: "b",
     }
 
@@ -1225,7 +1210,7 @@ def test_streaming_cdc_strict_seq_contract(spark, tmp_path):
         sink(spark.createDataFrame(clash, "value string"), batch_id=3)
 
     # snapshot untouched by the rejected batches
-    assert {r.id: r.v for r in spark.read.parquet(snap).collect()} == {
+    assert {r.id: r.v for r in V.read_version(spark, snap).collect()} == {
         1: "a", 2: "b",
     }
 
@@ -1237,18 +1222,16 @@ def test_streaming_cdc_randomized_replay_model(spark, tmp_path, sink_kind):
     ACROSS keys — per-key sequences strictly increase, the regime the
     sink documents as sound), split into random micro-batches, delivered
     in order with random re-deliveries of earlier batches interleaved.
-    Invariant: the final snapshot (or latest version, for the versioned
-    sink) equals the reference apply (per key, the highest-seq op wins;
-    deletes remove) no matter the batching or replay schedule. The
+    Invariant: the final snapshot equals the reference apply (per key,
+    the highest-seq op wins; deletes remove) no matter the batching or
+    replay schedule. ``replication`` reads the table's current snapshot;
+    ``versioned`` reads the newest version named by the version history
+    and checks every earlier version is still readable. The
     directed tie-boundary tests above pin the two known-hard cases; this
     sweeps the space around them."""
     import random as _random
 
-    from data_etl_with_dbt_spark.sources import versioned as V
-    from data_etl_with_dbt_spark.streaming.intake import (
-        cdc_replication_sink,
-        cdc_versioned_sink,
-    )
+    from data_etl_with_dbt_spark.streaming.intake import cdc_replication_sink
 
     rng = _random.Random(2024)
     for scenario in range(3):
@@ -1280,10 +1263,7 @@ def test_streaming_cdc_randomized_replay_model(spark, tmp_path, sink_kind):
             for a, b in zip([0] + cuts, cuts + [len(ordered)])
         ]
         snap = str(tmp_path / f"model_{sink_kind}_{scenario}")
-        if sink_kind == "replication":
-            sink = cdc_replication_sink(snap, "id: long, v: string", "id")
-        else:
-            sink = cdc_versioned_sink(snap, "id: long, v: string", "id")
+        sink = cdc_replication_sink(snap, "id: long, v: string", "id")
         bid = 0
         for i, batch in enumerate(batches):
             rows = [
@@ -1301,14 +1281,17 @@ def test_streaming_cdc_randomized_replay_model(spark, tmp_path, sink_kind):
                 sink(spark.createDataFrame(rows_r, "value string"), batch_id=bid)
                 bid += 1
         if sink_kind == "replication":
-            got = {r.id: r.v for r in spark.read.parquet(snap).collect()}
+            got = {r.id: r.v for r in V.read_version(spark, snap).collect()}
         else:
-            latest = V.list_versions(snap)[-1]
+            history = V.list_versions(snap)
+            for v in history[:-1]:
+                V.read_version(spark, snap, v).collect()
             got = {
-                r.id: r.v for r in V.read_version(spark, snap, latest).collect()
+                r.id: r.v
+                for r in V.read_version(spark, snap, history[-1]).collect()
             }
         assert got == final, (
-            f"{sink_kind} scenario {scenario}: snapshot {got} != reference "
+            f"scenario {scenario}: snapshot {got} != reference "
             f"{final}; log={ordered} cuts={cuts}"
         )
 
@@ -1361,20 +1344,19 @@ def test_streaming_cdc_strict_seq_randomized_model(spark, tmp_path):
                 ]
                 sink(spark.createDataFrame(rows_r, "value string"), batch_id=bid)
                 bid += 1
-        got = {r.id: r.v for r in spark.read.parquet(snap).collect()}
+        got = {r.id: r.v for r in V.read_version(spark, snap).collect()}
         assert got == final, (
             f"strict scenario {scenario}: {got} != {final}; log={log}"
         )
 
 
 def test_streaming_cdc_versioned_equal_seq_boundary(spark, tmp_path):
-    """Versioned sink, same tie-straddle scenario: new boundary rows commit,
-    replays commit nothing."""
-    from data_etl_with_dbt_spark.sources import versioned as V
-    from data_etl_with_dbt_spark.streaming.intake import cdc_versioned_sink
+    """Versioned replica, same tie-straddle scenario: new boundary rows
+    commit, replays commit nothing."""
+    from data_etl_with_dbt_spark.streaming.intake import cdc_replication_sink
 
     table = str(tmp_path / "tie_vtable")
-    sink = cdc_versioned_sink(table, "id: long, v: string", "id")
+    sink = cdc_replication_sink(table, "id: long, v: string", "id")
     b0 = [_dbz("c", 10, 1, "a"), _dbz("c", 20, 2, "b")]
     b1 = [_dbz("c", 20, 3, "tie"), _dbz("d", 20, 2, "b")]
     sink(spark.createDataFrame(b0, "value string"), batch_id=0)
@@ -2192,10 +2174,13 @@ class TestSubstringBloomFront:
             ).collect()
         )
         assert a == b2
-        # one bloom commit per batch; watermark covers the latest version
+        # one bloom commit per batch; the latest index manifest records
+        # that the bloom covers it, the sidecar's own meta its sizing
         assert len(V.list_versions(bloom_base + "/index__bloom")) == 3
-        sig = spark.read.parquet(bloom_base + "/index__bloomsig").first()
-        assert int(sig["covered_version"]) == bv[-1]
+        assert V.latest(bloom_base + "/index")[1]["bloom"] is True
+        assert set(V.latest(bloom_base + "/index__bloom")[1]) == {
+            "num_bits", "num_hashes",
+        }
 
     def test_backfill_covers_preexisting_index(self, spark, tmp_path):
         """Enabling the bloom on an index built WITHOUT it must backfill
@@ -2494,17 +2479,16 @@ class TestMinhashBloomFront:
             assert a == bb, rel
         a = sorted(
             (r.doc_id, tuple(r.signature))
-            for r in spark.read.parquet(p_base + "/index").collect()
+            for r in V.read_version(spark, p_base + "/index").collect()
         )
         bb = sorted(
             (r.doc_id, tuple(r.signature))
-            for r in spark.read.parquet(f_base + "/index").collect()
+            for r in V.read_version(spark, f_base + "/index").collect()
         )
         assert a == bb
-        # one bloom commit per batch; watermark covers the index rows
+        # one bloom commit per batch; the index manifest records coverage
         assert len(V.list_versions(f_base + "/index__bloom")) == 3
-        sig = spark.read.parquet(f_base + "/index__bloomsig").first()
-        assert int(sig["covered_rows"]) == len(a)
+        assert V.latest(f_base + "/index")[1]["bloom"] is True
 
     def test_backfill_on_preexisting_index(self, spark, tmp_path):
         from data_etl_with_dbt_spark.sources import versioned as V
@@ -2534,59 +2518,64 @@ class TestMinhashBloomFront:
         # lands as a version
         assert len(V.list_versions(base + "/index__bloom")) == 2
 
-    def test_part_file_count_none_when_unlistable(self, spark, tmp_path):
-        """The watermark probe returns None (not 0) when the store cannot
-        be listed — 0 is a *trustable-looking* count that a marker written
-        under the same failure would spuriously equal (r12 fix)."""
-        from data_etl_with_dbt_spark.streaming import intake
+    def _foreign_append(self, spark, index, rows, meta=None):
+        """Another writer appends signatures straight to the index."""
+        from data_etl_with_dbt_spark.operators.dedup import minhash_signatures
 
-        assert intake._part_file_count(spark, str(tmp_path / "nope")) is None
-        d = tmp_path / "store"
-        d.mkdir()
-        (d / "_SUCCESS").write_text("")
-        (d / ".part-0.crc").write_text("")
-        (d / "part-00000.parquet").write_text("x")
-        (d / "part-00001.parquet").write_text("x")
-        assert intake._part_file_count(spark, str(d)) == 2
-
-    def test_unlistable_store_never_trusts_stale_watermark(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Listing unavailable ⇒ the count-and-backfill path fires every
-        batch. Old behavior (probe returned 0 on OSError): the marker
-        recorded covered_files=0, the re-probe read 0, and 0 == 0 trusted
-        a STALE covered_rows forever — bloom false negatives (missed
-        duplicates) after any bloom-off append."""
-        from data_etl_with_dbt_spark.streaming import intake
-
-        monkeypatch.setattr(
-            intake, "_part_file_count", lambda spark, path: None
+        sigs = minhash_signatures(self._docs(spark, rows), "id", "text", 32, 3)
+        V.commit(
+            sigs.withColumnRenamed("id", "doc_id"), index, mode="append",
+            meta=meta,
         )
-        base = str(tmp_path / "nl")
-        fronted = intake.minhash_intake_sink(
+
+    def test_foreign_append_without_bloom_flag_forces_backfill(
+        self, spark, tmp_path
+    ):
+        """Coverage is the latest index manifest's bloom flag: an append
+        that does not set it (same recipe, no bloom words) makes the next
+        bloom-enabled batch backfill — probing the stale bloom would miss
+        the foreign document's duplicate."""
+        from data_etl_with_dbt_spark.streaming.intake import (
+            minhash_intake_sink,
+        )
+
+        base = str(tmp_path / "fa")
+        fronted = minhash_intake_sink(
             base + "/index", base + "/corpus", "id", "text",
             dup_ledger_path=base + "/dups", bloom_expected_keys=10_000,
         )
         fronted(self._docs(spark, [(1, self.A)]), 0)
-        marker = spark.read.parquet(base + "/index__bloomsig").first()
-        assert marker["covered_files"] is None  # failed probe ⇒ NULL, not 0
-        # a bloom-OFF sink appends signatures the bloom never saw — the
-        # exact staleness the watermark exists to catch
-        plain = intake.minhash_intake_sink(
-            base + "/index", base + "/corpus", "id", "text",
+        recipe = V.latest(base + "/index")[1]["recipe"]
+        self._foreign_append(
+            spark, base + "/index", [(2, self.B)], meta={"recipe": recipe}
         )
-        plain(self._docs(spark, [(2, self.B)]), 1)
-        # a near-dup of the bloom-blind doc: only the recount + backfill
-        # flags it (a trusted stale watermark would false-negative here)
-        fronted2 = intake.minhash_intake_sink(
-            base + "/index", base + "/corpus", "id", "text",
-            dup_ledger_path=base + "/dups", bloom_expected_keys=10_000,
-        )
-        fronted2(self._docs(spark, [(20, self.B)]), 2)
+        n_bloom = len(V.list_versions(base + "/index__bloom"))
+        fronted(self._docs(spark, [(20, self.B)]), 1)
         dups = spark.read.parquet(base + "/dups").collect()
         assert [(r.id, r.dup_of, r.dup_source) for r in dups] == [
             (20, 2, "index")
         ]
+        # backfill + the batch's own commit
+        assert len(V.list_versions(base + "/index__bloom")) == n_bloom + 2
+        assert V.latest(base + "/index")[1]["bloom"] is True
+
+    def test_metaless_foreign_append_raises_on_recipe(self, spark, tmp_path):
+        """A non-empty index whose latest manifest records no recipe
+        cannot be trusted to hold comparable signatures: the sink raises
+        instead of probing it."""
+        from data_etl_with_dbt_spark.streaming.intake import (
+            minhash_intake_sink,
+        )
+
+        base = str(tmp_path / "nr")
+        sink = minhash_intake_sink(
+            base + "/index", base + "/corpus", "id", "text",
+            bloom_expected_keys=10_000,
+        )
+        sink(self._docs(spark, [(1, self.A)]), 0)
+        self._foreign_append(spark, base + "/index", [(2, self.B)])
+        with pytest.raises(ValueError, match="incomparable across recipes"):
+            sink(self._docs(spark, [(20, self.B)]), 1)
 
     def test_sizing_mismatch_raises(self, spark, tmp_path):
         from data_etl_with_dbt_spark.streaming.intake import (
@@ -2605,6 +2594,162 @@ class TestMinhashBloomFront:
         )
         with pytest.raises(ValueError, match="incomparable across sizings"):
             s2(self._docs(spark, [(2, self.B)]), 1)
+
+
+class TestSinkStateStore:
+    """Every foreachBatch sink keeps its state in one versioned manifest:
+    a replayed batch id is a no-op for state, and a crash between the
+    outputs and the state commit duplicates outputs only."""
+
+    QID = "0b5e2c1e-state-store-test"
+
+    @pytest.fixture
+    def in_stream(self, spark):
+        """Run sink calls as if inside the stream ``QID``."""
+        sc = spark.sparkContext
+        sc.setLocalProperty("sql.streaming.queryId", self.QID)
+        yield
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+    @staticmethod
+    def _crash_once(monkeypatch, path):
+        """Make the next versioned commit to ``path`` raise."""
+        real = V.commit
+        armed = [True]
+
+        def commit(df, p, *args, **kwargs):
+            if armed[0] and p == path:
+                armed[0] = False
+                raise OSError("injected crash before the state commit")
+            return real(df, p, *args, **kwargs)
+
+        monkeypatch.setattr(V, "commit", commit)
+
+    def test_rollup_replay_applies_once(self, spark, tmp_path, in_stream):
+        from data_etl_with_dbt_spark.streaming.intake import (
+            additive_rollup_sink,
+        )
+
+        path = str(tmp_path / "rollup")
+        sink = additive_rollup_sink(path, keys=["k"], sum_cols=["n"])
+        b0 = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long")
+        sink(b0, 0)
+        sink(b0, 0)  # at-least-once re-delivery of the same batch
+        got = {r.k: r.n for r in V.read_version(spark, path).collect()}
+        assert got == {"a": 1, "b": 2}
+        sink(spark.createDataFrame([("a", 5)], "k string, n long"), 1)
+        got = {r.k: r.n for r in V.read_version(spark, path).collect()}
+        assert got == {"a": 6, "b": 2}
+        assert V.latest(path)[1]["batches"] == {self.QID: 1}
+        assert V.list_versions(path) == [1, 2]
+
+    def test_boilerplate_replay_counts_spans_once(
+        self, spark, tmp_path, in_stream
+    ):
+        from data_etl_with_dbt_spark.streaming.intake import (
+            boilerplate_intake_sink,
+        )
+
+        base = str(tmp_path / "bp")
+        sink = boilerplate_intake_sink(
+            base + "/dfindex", base + "/corpus", "id", "text", span_tokens=2,
+        )
+        batch = spark.createDataFrame([(1, "x y z")], "id long, text string")
+        sink(batch, 0)
+        sink(batch, 0)
+        dfs = {
+            r.span: r.df
+            for r in V.read_version(spark, base + "/dfindex").collect()
+        }
+        assert dfs and set(dfs.values()) == {1}  # counted once, not twice
+        assert spark.read.parquet(base + "/corpus").count() == 1
+
+    def test_crash_before_minhash_index_commit(
+        self, spark, tmp_path, in_stream, monkeypatch
+    ):
+        from data_etl_with_dbt_spark.streaming.intake import (
+            minhash_intake_sink,
+        )
+
+        A = " ".join(f"w{i}" for i in range(20))
+        B = " ".join(f"x{i}" for i in range(20))
+        base = str(tmp_path / "mh")
+        sink = minhash_intake_sink(
+            base + "/index", base + "/corpus", "id", "text",
+            dup_ledger_path=base + "/dups", bloom_expected_keys=10_000,
+        )
+        mk = lambda rows: spark.createDataFrame(rows, "id long, text string")
+        sink(mk([(1, A)]), 0)
+        b1 = mk([(10, A), (11, B)])
+        self._crash_once(monkeypatch, base + "/index")
+        with pytest.raises(OSError, match="injected crash"):
+            sink(b1, 1)
+        sink(b1, 1)  # the replay the stream's checkpoint delivers
+        sink(b1, 1)  # and a re-delivery after the commit landed
+        index = [r.doc_id for r in V.read_version(spark, base + "/index").collect()]
+        assert sorted(index) == [1, 11]  # state applied exactly once
+        corpus = [r.id for r in spark.read.parquet(base + "/corpus").collect()]
+        assert sorted(corpus) == [1, 11, 11]  # outputs may duplicate
+        dups = spark.read.parquet(base + "/dups").collect()
+        assert {(r.id, r.dup_of) for r in dups} == {(10, 1)}
+
+    def test_crash_before_rollup_commit(
+        self, spark, tmp_path, in_stream, monkeypatch
+    ):
+        from data_etl_with_dbt_spark.streaming.intake import (
+            additive_rollup_sink,
+        )
+
+        path = str(tmp_path / "rollup")
+        sink = additive_rollup_sink(path, keys=["k"], sum_cols=["n"])
+        sink(spark.createDataFrame([("a", 1)], "k string, n long"), 0)
+        b1 = spark.createDataFrame([("a", 2), ("b", 3)], "k string, n long")
+        self._crash_once(monkeypatch, path)
+        with pytest.raises(OSError, match="injected crash"):
+            sink(b1, 1)
+        sink(b1, 1)
+        sink(b1, 1)
+        got = {r.k: r.n for r in V.read_version(spark, path).collect()}
+        assert got == {"a": 3, "b": 3}
+
+    def test_crash_before_cdc_commit(
+        self, spark, tmp_path, in_stream, monkeypatch
+    ):
+        from data_etl_with_dbt_spark.streaming.intake import (
+            cdc_replication_sink,
+        )
+
+        snap = str(tmp_path / "cdc")
+        sink = cdc_replication_sink(snap, "id: long, v: string", "id")
+        mk = lambda rows: spark.createDataFrame(rows, "value string")
+        sink(mk([_dbz("c", 10, 1, "a"), _dbz("c", 11, 2, "b")]), 0)
+        b1 = mk([_dbz("u", 20, 1, "A"), _dbz("d", 21, 2, "b")])
+        self._crash_once(monkeypatch, snap)
+        with pytest.raises(OSError, match="injected crash"):
+            sink(b1, 1)
+        sink(b1, 1)
+        sink(b1, 1)
+        got = {r.id: r.v for r in V.read_version(spark, snap).collect()}
+        assert got == {1: "A"}
+        meta = V.latest(snap)[1]
+        assert meta["wm"] == 21 and meta["batches"] == {self.QID: 1}
+        assert V.list_versions(snap) == [1, 2]
+
+
+def test_streaming_shares_relations_only_through_materialize():
+    """Sink state is versioned commits and shared relations go through
+    ``materialize`` — no raw checkpoint or overwrite path is left in the
+    streaming sinks to re-grow a second state mechanism."""
+    import os
+
+    import data_etl_with_dbt_spark.streaming as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    for name in ("intake.py", "pipeline.py"):
+        with open(os.path.join(root, name)) as f:
+            src = f.read()
+        assert "localCheckpoint(" not in src, name
+        assert 'mode("overwrite")' not in src, name
 
 
 def test_three_stage_curation_stream(spark, tmp_path):

@@ -86,6 +86,53 @@ class TestVersionedTable:
         assert _vals(spark, t) == [0, 10, 11, 20, 21]
 
 
+class TestManifestMeta:
+    """Sink state rides in the manifest: ``meta`` is recorded per commit,
+    never carried forward implicitly, and copied by the operations that
+    keep a snapshot's logical content (compact, rollback)."""
+
+    def test_meta_recorded_per_commit_not_carried(self, spark, tmp_path):
+        from data_etl_with_dbt_spark.sources.versioned import latest
+
+        t = str(tmp_path / "tbl")
+        assert latest(t) == (0, {})  # never committed
+        commit(spark.range(0, 2), t, meta={"recipe": {"k": 3}})
+        assert latest(t) == (1, {"recipe": {"k": 3}})
+        commit(spark.range(2, 4), t, mode="append")
+        assert latest(t) == (2, {})  # a meta-less append records none
+
+    def test_merge_compact_rollback_meta(self, spark, tmp_path):
+        from data_etl_with_dbt_spark.sources import versioned as V
+
+        t = str(tmp_path / "tbl")
+        V.merge_commit(spark.range(0, 3), t, key="id", meta={"wm": 7})
+        assert V.latest(t) == (1, {"wm": 7})
+        V.commit(spark.range(3, 4), t, mode="append", meta={"wm": 9})
+        out = V.compact(spark, t, keep_versions=3)
+        assert V.latest(t) == (out["version"], {"wm": 9})
+        v = rollback(t, 1)
+        assert V.latest(t) == (v, {"wm": 7})
+        assert _vals(spark, t) == [0, 1, 2]
+
+    def test_list_versions_fails_stale_when_unlistable(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Only a missing ``_versions/`` means "never committed": any
+        other listing error must raise — reading it as a fresh table would
+        restart a sink's state from one batch, and commit's claim loop
+        would spin on the existing v00000001.json."""
+        t = str(tmp_path / "tbl")
+        assert list_versions(t) == []
+        commit(spark.range(0, 2), t)
+
+        def unlistable(path):
+            raise PermissionError(f"cannot list {path}")
+
+        monkeypatch.setattr(os, "listdir", unlistable)
+        with pytest.raises(PermissionError):
+            list_versions(t)
+
+
 class TestLineageTrapStructurallyGone:
     def test_read_then_append_recompute_sees_pinned_snapshot(self, spark, tmp_path):
         """The repo's 4x-sighted lineage trap: a plan that reads a directory
@@ -331,14 +378,15 @@ class TestRound5ReviewFixes:
         real_commit = V.commit
         raced = {"done": False}
 
-        def racing_commit(df, p, mode="append", stats_columns=None, expected_base=None):
+        def racing_commit(df, p, mode="append", stats_columns=None,
+                          expected_base=None, meta=None):
             if not raced["done"] and mode == "overwrite":
                 raced["done"] = True
                 real_commit(
                     spark.createDataFrame([(9, "late")], "id long, v string"),
                     p,
                 )
-            return real_commit(df, p, mode, stats_columns, expected_base)
+            return real_commit(df, p, mode, stats_columns, expected_base, meta)
 
         V.commit = racing_commit
         try:
@@ -393,12 +441,14 @@ class TestMergeCommitInterleavingModel:
             races = [fresh_rows(1) for _ in range(rng.randint(0, 2))]
 
             def racing(df, p, mode="append", stats_columns=None,
-                       expected_base=None, _races=races):
+                       expected_base=None, meta=None, _races=races):
                 if _races and mode == "overwrite":
                     racer = _races.pop()
                     real_commit(df_of(racer), p)
                     model.update({i: v for i, v in racer})
-                return real_commit(df, p, mode, stats_columns, expected_base)
+                return real_commit(
+                    df, p, mode, stats_columns, expected_base, meta
+                )
 
             V.commit = racing
             try:
