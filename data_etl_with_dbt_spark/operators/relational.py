@@ -14,6 +14,14 @@ from pyspark.sql import functions as F
 from data_etl_with_dbt_spark.materialize import materialize
 
 
+def by_name(*names: str) -> list[Column]:
+    """Columns selecting ``names`` verbatim: backtick-quoted, so a name
+    holding a dot or a space is one top-level column, never a struct
+    path — the spelling every pass-through projection of a caller's
+    columns needs."""
+    return [F.col("`" + n.replace("`", "``") + "`") for n in names]
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -21,7 +21,10 @@ Layout:
     table/
       data/<commit-uuid>/part-*.parquet     (immutable once committed)
       _versions/v00000001.json              {"files": [...], "mode": ...,
-                                             "meta": {...}}
+                                             "schema": ..., "meta": {...}}
+
+``schema`` is the snapshot's ``StructType.json()`` (present while every
+file shares one schema), so a pinned read starts no inference job.
 
 ``meta`` is the writer's own small JSON state, published atomically with
 the file list it describes — the streaming sinks keep their replay marks,
@@ -206,6 +209,7 @@ def commit(
     )
 
     schema_str = df.schema.simpleString()
+    schema_json = df.schema.json()
     staged_stats = (
         _collect_file_stats(staged, stats_columns) if stats_columns else {}
     )
@@ -235,6 +239,8 @@ def commit(
             "file_stats": fstats,
             "meta": meta or {},
         }
+        if len(schemas) == 1:
+            manifest["schema"] = schema_json
         if _publish(path, next_v, manifest):
             return next_v
         # another writer claimed next_v: recompute base and retry
@@ -255,13 +261,24 @@ def read_version(
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions}")
     manifest = _read_manifest(path, v)
+    return _reader(spark, manifest).parquet(*manifest["files"])
+
+
+def _reader(spark: SparkSession, manifest: dict):
+    """The reader for a manifest's files. A single-schema snapshot whose
+    manifest records the schema (``StructType.json``, which round-trips
+    any column name) reads with it — no footer-inference job. Appends that
+    evolved the schema union the footer schemas so columns absent from
+    older files surface as NULL (paid only when the manifest says it is
+    needed); manifests written before the schema was recorded infer it."""
+    from pyspark.sql.types import StructType
+
     reader = spark.read
     if len(manifest.get("schemas", [""])) > 1:
-        # appends evolved the schema: union the footer schemas so columns
-        # absent from older files surface as NULL (paid only when the
-        # manifest says it is needed)
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*manifest["files"])
+        return reader.option("mergeSchema", "true")
+    if "schema" in manifest:
+        return reader.schema(StructType.fromJson(json.loads(manifest["schema"])))
+    return reader
 
 
 def read_version_pruned(
@@ -297,12 +314,10 @@ def read_version_pruned(
         if s is None or not prunable or (s["max"] >= jlo and s["min"] <= jhi):
             keep.append(f)
     stats = {"files_read": len(keep), "files_total": len(manifest["files"])}
+    reader = _reader(spark, manifest)
     if not keep:
-        empty = spark.read.parquet(*manifest["files"]).where(F.lit(False))
+        empty = reader.parquet(*manifest["files"]).where(F.lit(False))
         return empty, stats
-    reader = spark.read
-    if len(manifest.get("schemas", [""])) > 1:
-        reader = reader.option("mergeSchema", "true")
     df = reader.parquet(*keep).where(
         (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     )
@@ -325,6 +340,8 @@ def rollback(path: str, to_version: int) -> int:
         "file_stats": manifest.get("file_stats", {}),
         "meta": manifest.get("meta", {}),
     }
+    if "schema" in manifest:
+        restored["schema"] = manifest["schema"]
     while True:
         next_v = list_versions(path)[-1] + 1
         if _publish(path, next_v, restored):

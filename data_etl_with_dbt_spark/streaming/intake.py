@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 
 from ..materialize import materialize
 from ..operators.dedup import incremental_minhash_dedup
+from ..operators.relational import by_name
 from ..sources import versioned as V
 from ..sources.io import driver_rows_df
 
@@ -271,8 +272,20 @@ def minhash_intake_sink(
 
     ``quality_model`` (a fitted ``ml.quality`` PipelineModel) gates each
     batch BEFORE dedup — streaming model inference, one JVM transform per
-    micro-batch; junk never gets shingled, never pollutes the signature
+    micro-batch (:func:`ml.quality.quality_scorer`, its JVM pipeline built
+    once per sink); junk never gets shingled, never pollutes the signature
     index, and optionally lands in ``reject_ledger_path`` with its score.
+    The gate filters the scored rows in place, so a verdict belongs to
+    its row even when ids repeat.
+
+    Per batch the sink runs the writes it must make (reject ledger,
+    corpus, dup ledger, index; Bloom words when fronted) plus the verdict
+    plan's exchanges. Each shared relation (the scored batch, the
+    signatures, the verdicts) is a lazy local checkpoint, computed once by
+    its first consumer's job rather than by a job of its own. The verdicts
+    carry the batch's own columns, so the corpus append is
+    ``survivors.select(*batch.columns)`` — no join back to the batch, no
+    second source scan.
 
     Signature-compatibility guard: the persisted index is only meaningful
     under the EXACT signature recipe that built it — ``signature_impl``
@@ -310,6 +323,11 @@ def minhash_intake_sink(
         "shingle": int(shingle),
     }
     bloom_path = index_path.rstrip("/") + "__bloom"
+    score = None
+    if quality_model is not None:
+        from ..ml.quality import quality_scorer
+
+        score = quality_scorer(quality_model, text_col)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -318,14 +336,14 @@ def minhash_intake_sink(
         if new_meta is None:
             return  # replay of a committed batch
         _check_recipe(index_path, version, meta, recipe)
-        scored = None
-        if quality_model is not None:
-            from ..ml.quality import score_quality
-
-            scored = score_quality(
-                quality_model, batch, id_col=id_col, text_col=text_col
-            ).persist()
-            scored.count()  # one scoring pass, reused by both branches
+        columns = batch.columns
+        docs = batch
+        if score is not None:
+            # score once, in place: the ledger and the gate both read the
+            # materialized scores (lazily: the first write computes them),
+            # and the gate is a filter on the rows themselves (no join
+            # back by id)
+            scored = materialize(score(batch))
             if reject_ledger_path is not None:
                 scored.where(
                     F.col("quality_prob") < quality_threshold
@@ -334,13 +352,7 @@ def minhash_intake_sink(
                     F.col("quality_prob"),
                     F.lit(batch_id).alias("batch_id"),
                 ).write.mode("append").parquet(reject_ledger_path)
-            keep = scored.where(
-                F.col("quality_prob") >= quality_threshold
-            ).select(id_col)
-            batch = batch.join(keep, on=id_col, how="left_semi")
-            # scored stays cached until every downstream consumer of `batch`
-            # (corpus append, index append, dup ledger) has run — unpersisting
-            # here would re-execute the model transform per action.
+            docs = scored.where(F.col("quality_prob") >= quality_threshold)
         index_schema = T.StructType(
             [
                 T.StructField("doc_id", batch.schema[id_col].dataType),
@@ -348,7 +360,8 @@ def minhash_intake_sink(
             ]
         )
         index = _snapshot(spark, index_path, version, index_schema)
-        index = index.withColumnRenamed("doc_id", id_col)
+        if id_col != "doc_id":
+            index = index.withColumnRenamed("doc_id", id_col)
         bloom_kwargs = {}
         if bloom_expected_keys is not None:
             words, m, k, add_bloom = _bloom_words(
@@ -360,7 +373,7 @@ def minhash_intake_sink(
                 index_bloom=words, bloom_bits=m, bloom_hashes=k
             )
         verdicts = incremental_minhash_dedup(
-            batch,
+            docs,
             index,
             id_col=id_col,
             text_col=text_col,
@@ -373,13 +386,15 @@ def minhash_intake_sink(
             **bloom_kwargs,
         )
         # four consumers below (corpus, dup ledger, bloom, index) and no
-        # cross-consumer CSE — compute the verdicts once
-        verdicts = materialize(verdicts, eager=True)
+        # cross-consumer CSE — compute the verdicts once, inside the
+        # corpus write's job; they carry the batch's own columns, so the
+        # corpus is a projection of them
+        verdicts = materialize(verdicts)
 
         survivors = verdicts.where(F.col("dup_of").isNull())
-        batch.join(survivors.select(id_col), on=id_col, how="left_semi").write.mode(
-            "append"
-        ).parquet(corpus_path)
+        survivors.select(*by_name(*columns)).write.mode("append").parquet(
+            corpus_path
+        )
         if dup_ledger_path is not None:
             verdicts.where(F.col("dup_of").isNotNull()).select(
                 F.col(id_col),
@@ -396,8 +411,6 @@ def minhash_intake_sink(
             index_path, mode="append", expected_base=version,
             meta={**new_meta, "recipe": recipe},
         )
-        if scored is not None:
-            scored.unpersist()
 
     return process
 

@@ -176,6 +176,27 @@ def test_quality_classifier_separates_and_filters(spark, weak_labeled_docs):
     assert kept.columns == weak_labeled_docs.columns
 
 
+def test_quality_filter_keeps_rows_not_ids(spark, weak_labeled_docs):
+    """The gate filters rows in place: a junk row whose id also belongs
+    to a clean row stays out (a join back by id let it through)."""
+    from data_etl_with_dbt_spark.ml.quality import (
+        filter_by_quality,
+        train_quality_classifier,
+    )
+
+    model = train_quality_classifier(
+        weak_labeled_docs, num_features=1 << 12, max_iter=20
+    )
+    clean, junk = (
+        weak_labeled_docs.where(F.col("doc_id") == i).first().text for i in (0, 1)
+    )
+    docs = spark.createDataFrame(
+        [(7, clean, 1.0), (7, junk, 0.0)], "doc_id long, text string, label double"
+    )
+    kept = filter_by_quality(model, docs, threshold=0.5).collect()
+    assert [(r.doc_id, r.text) for r in kept] == [(7, clean)]
+
+
 def test_quality_scoring_is_jvm_side(spark, weak_labeled_docs):
     """Corpus scoring must stay inside the JVM: no Python eval in the
     transform plan (HashingTF/LR are JVM transformers; probability

@@ -806,6 +806,75 @@ class TestIncrementalMinhash:
         assert v[10].dup_of == 1 and v[10].dup_source == "index"
         assert v[20].dup_of == 1 and v[20].dup_source == "index"
 
+    def test_verdicts_carry_batch_columns(self, spark):
+        batch = self.batch(spark).withColumn("src.name", F.lit("crawl"))
+        index = minhash_signatures(self.corpus(spark), "id", "text", 32, 3)
+        v = incremental_minhash_dedup(batch, index, "id", "text", **self.KW)
+        assert v.columns == [
+            "id", "text", "src.name", "signature", "dup_of", "est_jaccard",
+            "dup_source",
+        ]
+        rows = {r.id: r for r in v.collect()}
+        assert rows[11]["src.name"] == "crawl" and rows[11].dup_of is None
+        assert rows[12].text == rows[11].text and rows[12].dup_of == 11
+        with pytest.raises(ValueError, match="clash"):
+            incremental_minhash_dedup(
+                batch.withColumn("dup_of", F.lit(1)), index, "id", "text",
+                **self.KW,
+            )
+
+    def test_equal_jaccard_ties_index_first_then_min_id(self, spark):
+        """At equal est_jaccard an index partner beats a batch partner,
+        then the smaller dup_of wins (index ids and batch ids alike)."""
+        a = "the quick brown fox jumps over the lazy dog"
+        b = "an entirely unrelated document about spark engines"
+        index = minhash_signatures(
+            spark.createDataFrame([(2, a), (1, a)], "id long, text string"),
+            "id", "text", 32, 3,
+        )
+        batch = spark.createDataFrame(
+            [(5, a), (10, a), (30, b), (20, b), (40, b)], "id long, text string"
+        )
+        v = {
+            r.id: (r.dup_of, r.dup_source, r.est_jaccard)
+            for r in incremental_minhash_dedup(
+                batch, index, "id", "text", **self.KW
+            ).collect()
+        }
+        assert v == {
+            5: (1, "index", 1.0),
+            10: (1, "index", 1.0),
+            20: (None, None, None),
+            30: (20, "batch", 1.0),
+            40: (20, "batch", 1.0),
+        }
+
+    def test_band_keys_pinned(self, spark):
+        """Persisted Bloom sidecars hold band keys: the banding must keep
+        producing exactly these values for this signature."""
+        from data_etl_with_dbt_spark.operators.dedup import band_bloom_keys
+
+        sig = [
+            (i * 0x9E3779B97F4A7C15 % (1 << 64)) - (1 << 63) for i in range(1, 33)
+        ]
+        df = spark.createDataFrame([(7, sig)], "id long, signature array<bigint>")
+        keys = sorted(r.band_key for r in band_bloom_keys(df, "id", 32, 8).collect())
+        assert keys == [
+            -3477160748375709815, -2001961870349635404, -1042709004395786432,
+            951188353949271774, 2377291437028832961, 5210693803473640654,
+            8026245423042640912, 9139662416698276251,
+        ]
+
+    def test_signature_tree_rebuilt_for_a_new_gateway(self, spark, monkeypatch):
+        from pyspark import SparkContext
+
+        from data_etl_with_dbt_spark.operators.dedup import _signature_col
+
+        first = _signature_col("text", 32, 3)
+        assert _signature_col("text", 32, 3) is first  # built once per recipe
+        monkeypatch.setattr(SparkContext, "_gateway", object())
+        assert _signature_col("text", 32, 3) is not first  # never a stale tree
+
 
 class TestDedupClusters:
     def test_components_with_isolated_nodes(self, spark):

@@ -209,6 +209,52 @@ class TestSchemaEvolution:
         assert set(read_version(spark, t, 1).columns) == {"k", "v"}
 
 
+class TestSchemaCarryingReads:
+    """Each commit records its schema as ``StructType.json()``, so a pinned
+    read of a single-schema snapshot starts no footer-inference job."""
+
+    def test_pinned_read_starts_no_job(self, spark, tmp_path):
+        t = str(tmp_path / "tbl")
+        commit(spark.range(0, 5).withColumn("s", F.col("id").cast("string")), t)
+        commit(spark.range(5, 8).withColumn("s", F.col("id").cast("string")), t)
+        sc = spark.sparkContext
+        group = "versioned-pinned-read"
+        sc.setJobGroup(group, group)
+        try:
+            df = read_version(spark, t)
+            assert df.columns == ["id", "s"]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert _vals(spark, t) == list(range(8))
+
+    def test_dotted_and_spaced_names_round_trip(self, spark, tmp_path):
+        t = str(tmp_path / "tbl")
+        df = spark.createDataFrame(
+            [(1, "a", 2.5)], "`a.b` long, `c d` string, `e` double"
+        )
+        commit(df, t)
+        back = read_version(spark, t)
+        assert back.schema.simpleString() == df.schema.simpleString()
+        assert [tuple(r) for r in back.collect()] == [(1, "a", 2.5)]
+
+    def test_manifest_without_schema_still_reads(self, spark, tmp_path):
+        import json
+
+        from data_etl_with_dbt_spark.sources.versioned import _manifest_path
+
+        t = str(tmp_path / "tbl")
+        commit(spark.range(0, 3), t)
+        path = _manifest_path(t, 1)
+        with open(path) as f:
+            manifest = json.load(f)
+        assert "schema" in manifest
+        del manifest["schema"]  # the format before the schema was recorded
+        with open(path, "w") as f:
+            json.dump(manifest, f)
+        assert _vals(spark, t) == [0, 1, 2]
+
+
 class TestVersionedFuzz:
     def test_random_commit_sequences_match_model(self, spark, tmp_path):
         """Model-based fuzz: a random interleaving of append / overwrite /
